@@ -26,10 +26,23 @@ import sys
 from pathlib import Path
 
 
+def _default_driver_memory() -> str:
+    """Half of the host's MemTotal: in local mode the driver is the only
+    JVM, and the Python workers need the other half."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return f"{int(line.split()[1]) // 2048}m"
+    except OSError:
+        pass
+    return "4g"  # no /proc (not Linux)
+
+
 def make_spark(
     cpus: str = "*",
     shuffle_partitions: int | None = None,
-    driver_memory: str = "48g",
+    driver_memory: str | None = None,
     extra_conf: dict[str, str] | None = None,
 ):
     # Python workers must be able to import this package even when the
@@ -50,7 +63,8 @@ def make_spark(
     b = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("ds-discovery-taxonomy-spark")
-        .config("spark.driver.memory", driver_memory)  # local mode: the only JVM
+        # local mode: the only JVM
+        .config("spark.driver.memory", driver_memory or _default_driver_memory())
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -151,20 +151,10 @@ class EngineConfig:
     #: term per chunk).
     eval_chunk_size: int = 68
 
-    #: concurrent bucket-build jobs (reference runs 5 concurrent batches,
-    #: FullReindexCategoriser.cs:87-213); each commits independently.
-    #: Only used when ``bucket_resume`` is True.
+    #: Has no effect: the postings build is ONE Spark job for every
+    #: bucket, committed in one manifest write.  Kept so callers that
+    #: still pass it keep working.
     build_parallelism: int = 4
-
-    #: True -> build postings one bucket-job at a time with per-bucket
-    #: manifest commits (finest kill/resume granularity; driver-crash
-    #: recovery skips committed buckets).  False (default) -> ONE Spark job
-    #: for every bucket: one wide shuffle at full cluster parallelism, one
-    #: partitioned write — no per-job scheduling tails or repeated staging
-    #: scans (measured ~40% less bucket-stage wall locally); resume
-    #: granularity is the whole postings stage (Spark task retry handles
-    #: executor failures either way).
-    bucket_resume: bool = False
 
     #: (retired round 2) the postings build no longer joins the dictionary
     #: at all: blocks store the df-independent ``max_norm`` (idf folds in

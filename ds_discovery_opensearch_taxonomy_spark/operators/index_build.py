@@ -25,7 +25,8 @@ Scale levers (north rule):
   globally mergeable by concatenation (no k-way merge at read time);
 * blocks never cross an eval-band boundary (ord prefix), so query-time
   per-(category, band) grouping is exact;
-* per-bucket manifest commits give kill/resume with lineage + metrics.
+* one atomic manifest commit per build step (seven in all; postings
+  commits every bucket's lineage + metrics at once) gives kill/resume.
 """
 
 from __future__ import annotations
@@ -197,11 +198,25 @@ from ds_discovery_opensearch_taxonomy_spark.functions.vtokenize import (  # noqa
 #: factorize-call overhead against span-cache churn
 TOKENIZE_CHUNK_DOCS = 2048
 
-#: bump when the on-disk table layout changes incompatibly (4 = packed
-#: staging runs + df-free blocks; 5 = narrow run streams: rel-u32 ords,
-#: width-flagged u16 tf/pos_lens, u8 quantized dl); build_index refuses to
-#: resume across versions and append_batch refuses to append across them
-INDEX_FORMAT_VERSION = 5
+#: bump when the on-disk table layout or the manifest contract changes
+#: incompatibly (4 = packed staging runs + df-free blocks; 5 = narrow run
+#: streams: rel-u32 ords, width-flagged u16 tf/pos_lens, u8 quantized dl;
+#: 6 = one manifest commit per build step, so every committed step carries
+#: all of its fields: docs tee, both attempt maps, sum_dl, encode_avgdl,
+#: band_bits/ord_bits).  build_index wipes an index of any other format;
+#: readers and appends refuse it (check_format)
+INDEX_FORMAT_VERSION = 6
+
+
+def check_format(cat: IndexCatalog) -> None:
+    """Refuse an index whose manifest is not of the current format."""
+    fmt = cat.get_meta("format")
+    if fmt != INDEX_FORMAT_VERSION:
+        raise RuntimeError(
+            f"index at {cat.root} has on-disk format {fmt}, this engine "
+            f"reads format {INDEX_FORMAT_VERSION} only — rebuild the index "
+            "(build_index)"
+        )
 
 #: posting blocks are keyed by the numeric ``term_id`` (see term_id_of) — the
 #: heavy build/query paths stay ALL-NUMERIC (term strings live only in the
@@ -676,16 +691,20 @@ def docmap_rows(
 
 def write_doc_stats(
     cat: IndexCatalog, field_names: list[str], sum_dl: dict, n_docs: int
-) -> None:
+) -> dict[str, float]:
     """(Re)write the tiny per-field stats table driver-side with pyarrow —
-    a Spark job for 4 rows pays the createDataFrame warmup for nothing.
-    Appends rewrite it with updated N/avgdl (values are derivable from the
-    manifest: build base + committed delta sums, so a crash mid-write is
-    repaired by the next append/commit)."""
+    a Spark job for 4 rows pays the createDataFrame warmup for nothing —
+    and return its {field: avgdl}.  Appends rewrite it with updated
+    N/avgdl (values are derivable from the manifest: build base +
+    committed delta sums, so a crash mid-write is repaired by the next
+    append/commit)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pathlib import Path as _Path
 
+    avgdl = {
+        fn: sum_dl.get(fn, 0) / n_docs if n_docs else 1.0 for fn in field_names
+    }
     tbl = pa.table(
         {
             "field": pa.array(field_names, pa.string()),
@@ -693,18 +712,13 @@ def write_doc_stats(
                 [int(sum_dl.get(fn, 0)) for fn in field_names], pa.int64()
             ),
             "n_docs": pa.array([n_docs] * len(field_names), pa.int64()),
-            "avgdl": pa.array(
-                [
-                    sum_dl.get(fn, 0) / n_docs if n_docs else 1.0
-                    for fn in field_names
-                ],
-                pa.float64(),
-            ),
+            "avgdl": pa.array([avgdl[fn] for fn in field_names], pa.float64()),
         }
     )
     stats_dir = _Path(cat.path(IndexCatalog.DOC_STATS))
     stats_dir.mkdir(parents=True, exist_ok=True)
     pq.write_table(tbl, stats_dir / "part-00000.parquet")
+    return avgdl
 
 
 def _band_of(ords: np.ndarray, ord_shift: int) -> np.ndarray:
@@ -895,48 +909,6 @@ SALTED_SCHEMA = T.StructType(
         T.StructField("wflags", T.ByteType(), False),
     ]
 )
-
-
-def _run_stages_concurrently(cat: IndexCatalog, stages) -> None:
-    """Run independent stages' Spark ACTIONS in threads; commit results
-    sequentially on the caller's thread (manifest read-modify-write is not
-    thread-safe).  ``stages`` is [(stage_name, action) ...]; an action
-    returns the metrics dict for its commit.  Already-committed stages are
-    skipped; if any action fails, completed ones are committed first so a
-    resume skips them, then the first error propagates."""
-    import time as _time
-    from concurrent.futures import ThreadPoolExecutor
-
-    def timed(action):
-        # per-ACTION wall time recorded in the commit metrics: concurrent
-        # stages commit sequentially afterwards, so manifest timestamps
-        # alone cannot attribute wall time within the group
-        def run():
-            t0 = _time.time()
-            m = action() or {}
-            m.setdefault("elapsed_sec", round(_time.time() - t0, 3))
-            return m
-
-        return run
-
-    todo = [(n, timed(a)) for n, a in stages if not cat.stage_done(n)]
-    if not todo:
-        return
-    if len(todo) == 1:
-        name, action = todo[0]
-        cat.commit_stage(name, action() or {})
-        return
-    with ThreadPoolExecutor(max_workers=len(todo)) as ex:
-        futures = [(name, ex.submit(action)) for name, action in todo]
-        first_err = None
-        for name, fut in futures:
-            try:
-                cat.commit_stage(name, fut.result() or {})
-            except Exception as e:  # commit completed stages before raising
-                if first_err is None:
-                    first_err = e
-        if first_err is not None:
-            raise first_err
 
 
 def _heavy_salt_map(dict_df: DataFrame, config: EngineConfig) -> dict[int, int]:
@@ -1369,38 +1341,22 @@ def make_direct_block_writer(builder, out_dir: str, n_buckets: int):
     return run
 
 
-def _reconcile_dir(bdir, expected: dict[int, int] | None = None) -> None:
+def _reconcile_dir(bdir, expected: dict[int, int]) -> None:
     """Per-directory cleanup for direct task writes: remove orphaned
-    ``.inprogress`` files (killed attempts) and resolve duplicate
-    committed attempts of one partition.
+    ``.inprogress`` files (killed attempts) and every committed file that
+    is not the expected attempt of its partition.
 
     ``expected`` is the (pid -> attempt id) map assembled from the stat
-    rows of the attempts Spark reported SUCCESS for — with it, exactly
-    those attempts' files survive: any other attempt's file (a
-    speculative copy that committed before being killed, or a zombie that
-    renamed late) and any pid with no committed stats row is removed.
-    Without it (legacy indexes with no persisted map), fall back to
-    keep-newest — correct for plain task RETRIES (the retry has the
-    higher attempt id and identical deterministic output) but NOT under
-    speculation, which is why all current writers persist the map."""
+    rows of the attempts Spark reported SUCCESS for — exactly those
+    attempts' files survive: any other attempt's file (a speculative copy
+    that committed before being killed, or a zombie that renamed late) and
+    any pid with no committed stats row is removed."""
     for f in bdir.glob("*.inprogress"):
         f.unlink(missing_ok=True)
-    by_pid: dict[int, list] = {}
     for f in bdir.glob("part-*.parquet"):
         key = _direct_file_key(f)
-        if key is not None:
-            by_pid.setdefault(key[0], []).append((key[1], f))
-    if expected is not None:
-        for pid, files in by_pid.items():
-            keep = expected.get(pid)
-            for att, f in files:
-                if keep is None or att != keep:
-                    f.unlink(missing_ok=True)
-        return
-    for files in by_pid.values():
-        if len(files) > 1:
-            for _, f in sorted(files)[:-1]:
-                f.unlink(missing_ok=True)
+        if key is not None and expected.get(key[0]) != key[1]:
+            f.unlink(missing_ok=True)
 
 
 def _direct_file_key(f) -> tuple[int, int] | None:
@@ -1419,9 +1375,7 @@ def _direct_file_key(f) -> tuple[int, int] | None:
         return None
 
 
-def _reconcile_direct_write(
-    out_dir, expected: dict[int, int] | None = None
-) -> None:
+def _reconcile_direct_write(out_dir, expected: dict[int, int]) -> None:
     """Post-job cleanup for the bucketed direct writer; runs on the
     driver after the stats collect() proves the job done (and again at
     reader open, from the manifest-persisted map — see
@@ -1438,39 +1392,37 @@ def attempts_map(stats) -> dict[str, int]:
     return {str(int(r["pid"])): int(r["att"]) for r in stats}
 
 
-def _int_keys(m: dict | None) -> dict[int, int] | None:
-    return None if m is None else {int(k): int(v) for k, v in m.items()}
+def _int_keys(m: dict) -> dict[int, int]:
+    return {int(k): int(v) for k, v in m.items()}
 
 
-def reconcile_from_manifest(cat) -> None:
+def _reconcile_staged(cat: IndexCatalog) -> None:
+    """Prune staging AND docs — written by the same tokenize tasks (docs
+    tee) — to the committed staging attempts map.  The build calls it
+    right before each consumer (docmap/dictionary/postings) lists those
+    directories: a speculative tokenize attempt killed mid-task can
+    os.rename its final AFTER the post-job sweep (the build-internal
+    zombie window)."""
+    from pathlib import Path
+
+    stg = _int_keys(cat.manifest()["stages"]["staging"]["metrics"]["attempts"])
+    for table in (IndexCatalog.STAGING, IndexCatalog.DOCS):
+        _reconcile_dir(Path(cat.path(table)), stg)
+
+
+def reconcile_from_manifest(cat: IndexCatalog) -> None:
     """Re-run direct-write reconciliation from the manifest-persisted
     attempt maps — called at IndexReader open.  Closes the zombie window:
     a speculative attempt killed mid-task can os.rename its completed
     file AFTER the post-job sweep ran; any reader opened later (same
     Spark app — executors of a dead app die with it, so crash-restart
     cannot produce new zombies) prunes it here before the first scan.
-    No-op for tables without a persisted map (pre-round-4 indexes, or
-    JVM-written tables whose committer already handles speculation)."""
-    post = _int_keys(cat.get_meta("postings_attempts"))
-    if post is not None:
-        _reconcile_direct_write(cat.path("postings"), post)
-    stg_metrics = (
-        cat.manifest()["stages"].get("staging", {}).get("metrics", {})
+    JVM-written tables (compacted docs) are untouched: _direct_file_key
+    rejects committer file names."""
+    _reconcile_direct_write(
+        cat.path(IndexCatalog.POSTINGS), _int_keys(cat.get_meta("postings_attempts"))
     )
-    stg = _int_keys(stg_metrics.get("attempts"))
-    if stg is not None:
-        from pathlib import Path
-
-        _reconcile_dir(Path(cat.path("staging")), stg)
-        # the docs table is pruned by this map ONLY when it was written by
-        # the same tasks (docs tee, metrics.docs_teed): a mixed-manifest
-        # resume rebuilds staging WITHOUT re-teeing docs, so the committed
-        # docs files carry the ORIGINAL build's attempt ids — pruning them
-        # against the re-run's map would delete live data.  Older
-        # JVM-written docs tables are a no-op either way (_direct_file_key
-        # rejects committer file names).
-        if stg_metrics.get("docs_teed"):
-            _reconcile_dir(Path(cat.path("docs")), stg)
+    _reconcile_staged(cat)
 
 
 #: direct staging-write stats: per-(task, field) cf sums over kind-0 rows
@@ -1713,33 +1665,28 @@ _MERGE_TARGET_BYTES = 256 << 20
 
 
 def _merge_partitions(
-    spark: SparkSession, cat: IndexCatalog, config: EngineConfig,
-    frac: float = 1.0,
+    spark: SparkSession, cat: IndexCatalog, config: EngineConfig
 ) -> int:
     """Partition count for the (term_id, salt) merge shuffle: scaled from
-    committed staging bytes (``frac`` = share of staging this job reads,
-    e.g. 1/n_term_buckets for a single-bucket resume), floored at 2x cores
-    so small builds still use the whole cluster."""
-    staging_bytes = (
-        cat.manifest()["stages"]
-        .get("staging", {})
-        .get("metrics", {})
-        .get("bytes")
-    ) or cat.table_bytes(IndexCatalog.STAGING)
-    by_bytes = -(-int(staging_bytes * frac) // _MERGE_TARGET_BYTES)
+    committed staging bytes, floored at 2x cores so small builds still
+    use the whole cluster."""
+    staging_bytes = cat.manifest()["stages"]["staging"]["metrics"]["bytes"]
+    by_bytes = -(-int(staging_bytes) // _MERGE_TARGET_BYTES)
     return max(2 * spark.sparkContext.defaultParallelism, 16, by_bytes)
 
 
 def _build_postings_single_job(
     spark: SparkSession, cat: IndexCatalog, config: EngineConfig, builder,
-    ord_bits: int, dict_ready=None,
-) -> None:
+    ord_bits: int,
+) -> tuple[dict[str, int], dict[int, dict]]:
     """All buckets in ONE Spark job: packed-run scan -> heavy-term salt
     split -> one wide (term_id, salt) shuffle of packed RUNS -> per-
     partition merge + block encode -> bucket-partitioned write.  Full
     cluster parallelism throughout — no per-bucket job tails (the round-1
     loop's bucket stage scaled 1.6x/4 because each of 8 jobs serialized
-    its own shuffle+sort+write phases)."""
+    its own shuffle+sort+write phases).  Returns the committed-attempts
+    map and per-bucket {blocks, postings, bytes} for the caller's ONE
+    postings commit."""
     staged_all = spark.read.parquet(cat.path(IndexCatalog.STAGING)).where(
         F.col("kind") == 0
     )
@@ -1755,7 +1702,7 @@ def _build_postings_single_job(
     n_parts = _merge_partitions(spark, cat, config)
     nb = config.n_term_buckets
     # fresh output dir: the job is all-or-nothing at the manifest level
-    # (commit_bucket below), so a leftover partial tree is always garbage
+    # (one postings commit), so a leftover partial tree is always garbage
     import shutil as _shutil
 
     post_dir = cat.path(IndexCatalog.POSTINGS)
@@ -1777,37 +1724,13 @@ def _build_postings_single_job(
     )
     atts = attempts_map(stats)
     _reconcile_direct_write(post_dir, _int_keys(atts))
-    # persisted so every reader open re-prunes non-committed attempt
-    # files (zombie speculative renames after this sweep)
-    cat.set_meta("postings_attempts", atts)
-    blocks_by_bucket: dict[int, int] = {b: 0 for b in range(nb)}
-    postings_by_bucket: dict[int, int] = {b: 0 for b in range(nb)}
+    buckets = {b: {"blocks": 0, "postings": 0} for b in range(nb)}
     for r in stats:
-        blocks_by_bucket[int(r["bucket"])] += int(r["blocks"])
-        postings_by_bucket[int(r["bucket"])] += int(r["postings"])
-    if dict_ready is not None:
-        # join + commit the overlapped dictionary stage before reading its
-        # terms_per_bucket metrics (it finishes long before the merge; a
-        # dictionary failure aborts here, before any bucket commits)
-        dict_ready()
-    terms_per_bucket = (
-        cat.manifest()["stages"]
-        .get("dictionary", {})
-        .get("metrics", {})
-        .get("terms_per_bucket", {})
-    )
-    for bucket in range(nb):
-        cat.commit_bucket(
-            bucket,
-            {
-                "blocks": blocks_by_bucket[bucket],
-                "postings": postings_by_bucket[bucket],
-                "terms": int(terms_per_bucket.get(str(bucket), 0)),
-                "bytes": cat.table_bytes(
-                    f"{IndexCatalog.POSTINGS}/bucket={bucket}"
-                ),
-            },
-        )
+        buckets[int(r["bucket"])]["blocks"] += int(r["blocks"])
+        buckets[int(r["bucket"])]["postings"] += int(r["postings"])
+    for b, m in buckets.items():
+        m["bytes"] = cat.table_bytes(f"{IndexCatalog.POSTINGS}/bucket={b}")
+    return atts, buckets
 
 
 def build_index(
@@ -1817,118 +1740,57 @@ def build_index(
     config: EngineConfig | None = None,
     resume: bool = True,
 ) -> IndexCatalog:
-    """Full index build with per-bucket checkpoint/resume."""
+    """Full index build in seven steps, each landing in ONE atomic
+    manifest commit (IndexCatalog.commit): ords + layout meta; staging +
+    docs; doc_stats + encode_avgdl; dictionary; postings (attempts map +
+    every bucket); docmap; complete.  A resumed build skips the committed
+    steps; a crash between two commits leaves only uncommitted files,
+    which the re-run step overwrites."""
+    import shutil as _shutil
+    import time as _time
+    from concurrent.futures import ThreadPoolExecutor as _TPE
+    from pathlib import Path as _Path
+
     config = config or EngineConfig()
     cat = IndexCatalog(out_dir)
-    # resuming across an on-disk format change would mix ord- and
-    # hash-keyed stages — wipe and rebuild instead
+    # resuming across an on-disk format change would mix incompatible
+    # stages — wipe and rebuild instead
     stale = (
-        cat.manifest().get("stages")
+        cat.manifest()["stages"]
         and cat.get_meta("format") != INDEX_FORMAT_VERSION
     )
     if not resume or stale:
-        import shutil
-
-        shutil.rmtree(cat.root, ignore_errors=True)
+        _shutil.rmtree(cat.root, ignore_errors=True)
         cat = IndexCatalog(out_dir)
-    cat.set_meta("format", INDEX_FORMAT_VERSION)
 
     corpus_with_ids = with_doc_ids(corpus) if "doc_id" not in corpus.columns else corpus
 
-    # -- stage 0: dense-ordinal layout (one narrow count job) ---------------
+    # -- step 1: dense-ordinal layout (one narrow count job) ---------------
     # offsets are committed to the manifest so a killed/resumed build
     # re-attaches IDENTICAL ords (and a changed input partitioning between
-    # runs is detected by the docs-stage count assertion below)
+    # runs is detected by the tokenizer's per-partition count guards).
+    # Band layout + ordinal width are INDEX properties (blocks never cross
+    # band boundaries; bands are ord ranges) committed with them — readers
+    # must use these, not their own config's derivation
     if not cat.stage_done("ords"):
         offsets, n_total = partition_offsets(corpus_with_ids)
-        cat.commit_stage("ords", {"offsets": offsets, "n_docs": n_total})
+        cat.commit(
+            stages={"ords": {"offsets": offsets, "n_docs": n_total}},
+            meta={
+                "format": INDEX_FORMAT_VERSION,
+                "band_bits": max(config.n_eval_bands - 1, 0).bit_length(),
+                "ord_bits": ord_bits_of(n_total),
+            },
+        )
     ords_m = cat.manifest()["stages"]["ords"]["metrics"]
     offsets = [int(x) for x in ords_m["offsets"]]
     n_docs = int(ords_m["n_docs"])
-    band_bits = max(config.n_eval_bands - 1, 0).bit_length()
-    ord_shift = ord_shift_of(n_docs, band_bits)
-    # band layout + ordinal width are INDEX properties (blocks never cross
-    # band boundaries; bands are ord ranges) — readers must use these, not
-    # their own config's derivation
-    cat.set_meta("band_bits", band_bits)
-    cat.set_meta("ord_bits", ord_bits_of(n_docs))
-
-    # -- stages 1 + 2 run their Spark ACTIONS concurrently (independent:
-    # both read only the corpus); manifest commits stay on this thread.
-    # Saves one small-job floor per build — at 100k docs the docs write is
-    # ~3 s of mostly scheduling that otherwise serializes before staging.
-    meta_cols = [
-        c
-        for c in ["doc_id", "repo", "path", "commit", "lang", "content_sha"]
-        + [f for f in config.int_fields if f in corpus_with_ids.columns]
-        if c in corpus_with_ids.columns
-    ]
-
-    def _docs_action():
-        docs = attach_ords(
-            corpus_with_ids.select(
-                *[c for c in meta_cols if c in corpus_with_ids.columns]
-            ),
-            offsets,
-            expected=expected_counts(offsets, n_docs),
-        )
-        docs_obs = Observation("docs")
-        cat.write(docs.observe(docs_obs, F.count(F.lit(1)).alias("n")), IndexCatalog.DOCS)
-        n_written = int(docs_obs.get["n"])
-        if n_written != n_docs:
-            raise RuntimeError(
-                f"docs pass saw {n_written} rows but the offsets pass saw "
-                f"{n_docs} — the input's partitioning is not stable across "
-                "scans; materialize the corpus (e.g. write it to parquet) "
-                "before building"
-            )
-
-    # -- stage 2: staged packed posting runs (per-split local indexes) ------
-    # per-field sum of run cf rides the write as conditional-sum
-    # observations: sum(cf) over a field's kind-0 rows == sum of per-doc
-    # field lengths, so avgdl needs no second pass over staging at all.
+    ord_bits = int(cat.get_meta("ord_bits"))
+    ord_shift = ord_shift_of(n_docs, int(cat.get_meta("band_bits")))
     field_names = [f.name for f in config.fields]
 
-    def _staging_action(docs_out: str | None = None):
-        # UNPARTITIONED direct write with ``bucket`` as an ordinary column:
-        # every hot-path consumer (dictionary agg, docmap agg, single-job
-        # postings build) full-scans staging, so hive-partitioning by
-        # bucket bought nothing there while costing a sort-based
-        # dynamic-partition write (measured 45.6 s vs 6.2 s plain at 25k
-        # docs).  The rare ``bucket_resume`` path filters on the bucket
-        # COLUMN instead (row-group stats).  Tasks write their own parquet
-        # (make_direct_staging_writer) and return per-field cf sums —
-        # sum(cf) over a field's kind-0 rows == sum of per-doc field
-        # lengths, so avgdl needs no second pass over staging at all.
-        import shutil as _shutil
-        from pathlib import Path as _Path
-
-        stg_dir = cat.path(IndexCatalog.STAGING)
-        _shutil.rmtree(stg_dir, ignore_errors=True)
-        stats = tokenize_corpus(
-            corpus_with_ids, config, offsets,
-            expected=expected_counts(offsets, n_docs),
-            direct_out=stg_dir,
-            docs_out=docs_out,
-            docs_cols=meta_cols if docs_out is not None else None,
-        ).collect()
-        atts = attempts_map(stats)
-        _reconcile_dir(_Path(stg_dir), _int_keys(atts))
-        if docs_out is not None:
-            _reconcile_dir(_Path(docs_out), _int_keys(atts))
-        by_ford: dict[int, int] = {}
-        for r in stats:
-            by_ford[int(r["ford"])] = by_ford.get(int(r["ford"]), 0) + int(
-                r["sum_cf"]
-            )
-        sum_dl = {fn: by_ford.get(i, 0) for i, fn in enumerate(field_names)}
-        return {
-            "bytes": cat.table_bytes(IndexCatalog.STAGING),
-            "sum_dl": sum_dl,
-            "attempts": atts,  # reconcile_from_manifest re-prunes from this
-        }
-
-    if not cat.stage_done("docs") and not cat.stage_done("staging"):
+    # -- step 2: staged packed posting runs + the docs table ---------------
+    if not cat.stage_done("staging"):
         # ONE corpus scan for both: tokenize tasks tee the DOCS table out
         # of the same input batches (make_docs_tee).  The previous shape —
         # two concurrent full scans — re-read and re-decompressed every
@@ -1937,79 +1799,72 @@ def build_index(
         # ~40 s at 32c/250k on this host).  sha256/doc_id still compute
         # JVM-side inside the one scan (with_doc_ids columns ride the
         # Arrow feed).  Per-partition count guards in the tokenizer keep
-        # the ord-alignment contract; crash anywhere re-runs both stages.
-        import shutil as _shutil
-        import time as _time
-
+        # the ord-alignment contract.
+        #
+        # UNPARTITIONED direct write with ``bucket`` as an ordinary column:
+        # every consumer (dictionary agg, docmap agg, single-job postings
+        # build) full-scans staging, so hive-partitioning by bucket bought
+        # nothing while costing a sort-based dynamic-partition write
+        # (measured 45.6 s vs 6.2 s plain at 25k docs).  Tasks write their
+        # own parquet (make_direct_staging_writer) and return per-field cf
+        # sums — sum(cf) over a field's kind-0 rows == sum of per-doc field
+        # lengths, so avgdl needs no second pass over staging at all.
+        meta_cols = [
+            c
+            for c in ["doc_id", "repo", "path", "commit", "lang", "content_sha"]
+            + [f for f in config.int_fields if f in corpus_with_ids.columns]
+            if c in corpus_with_ids.columns
+        ]
+        stg_dir = cat.path(IndexCatalog.STAGING)
         docs_dir = cat.path(IndexCatalog.DOCS)
+        _shutil.rmtree(stg_dir, ignore_errors=True)
         _shutil.rmtree(docs_dir, ignore_errors=True)
         t0 = _time.time()
-        m = _staging_action(docs_out=docs_dir)
-        m["elapsed_sec"] = round(_time.time() - t0, 3)
-        m["docs_teed"] = True
-        cat.commit_stage("staging", m)
-        cat.commit_stage("docs", {"n_docs": n_docs, "direct": True})
-    else:
-        # resume from an older manifest where exactly one of the two is
-        # committed: run the remaining stage on its own legacy path
-        _run_stages_concurrently(
-            cat,
-            [
-                ("docs", lambda: (_docs_action(), {"n_docs": n_docs})[1]),
-                ("staging", _staging_action),
-            ],
-        )
-
-    def _reprune_staged() -> None:
-        """Close the BUILD-INTERNAL zombie window (round-4 review): a
-        speculative tokenize attempt killed mid-task can os.rename its
-        staging/docs final AFTER `_staging_action`'s post-job sweep but
-        BEFORE an overlapped consumer (docmap/dictionary/postings) lists
-        the directory — re-prune from the manifest-persisted attempts map
-        right before each such listing.  Reader opens are separately
-        protected by reconcile_from_manifest."""
-        from pathlib import Path as _Path
-
-        metrics = (
-            cat.manifest()["stages"].get("staging", {}).get("metrics", {})
-        )
-        stg = _int_keys(metrics.get("attempts"))
-        if stg is not None:
-            _reconcile_dir(_Path(cat.path(IndexCatalog.STAGING)), stg)
-            # docs only when the SAME tasks teed it (see
-            # reconcile_from_manifest: a mixed-manifest resume's docs
-            # carry the original build's attempt ids)
-            if metrics.get("docs_teed"):
-                _reconcile_dir(_Path(cat.path(IndexCatalog.DOCS)), stg)
-
-    # -- stage 3: per-field doc stats (N, avgdl) — tiny driver-built table --
-    # 4 rows: written directly with pyarrow (a Spark job for this pays the
-    # python-RDD createDataFrame warmup for nothing; Spark reads it fine)
-    if not cat.stage_done("doc_stats"):
-        sum_dl = cat.manifest()["stages"]["staging"]["metrics"].get("sum_dl")
-        if sum_dl is None:  # resumed from an older staging commit
-            _reprune_staged()
-            staged = spark.read.parquet(cat.path(IndexCatalog.STAGING))
-            sum_dl = {
-                field_names[int(r["ford"])]: int(r["s"])
-                for r in staged.where(F.col("kind") == 0)
-                .groupBy("ford")
-                .agg(F.sum("cf").alias("s"))
-                .collect()
+        stats = tokenize_corpus(
+            corpus_with_ids, config, offsets,
+            expected=expected_counts(offsets, n_docs),
+            direct_out=stg_dir,
+            docs_out=docs_dir,
+            docs_cols=meta_cols,
+        ).collect()
+        atts = attempts_map(stats)
+        for d in (stg_dir, docs_dir):
+            _reconcile_dir(_Path(d), _int_keys(atts))
+        by_ford: dict[int, int] = {}
+        for r in stats:
+            by_ford[int(r["ford"])] = by_ford.get(int(r["ford"]), 0) + int(
+                r["sum_cf"]
+            )
+        cat.commit(
+            stages={
+                "staging": {
+                    "bytes": cat.table_bytes(IndexCatalog.STAGING),
+                    "sum_dl": {
+                        fn: by_ford.get(i, 0) for i, fn in enumerate(field_names)
+                    },
+                    # reconcile_from_manifest re-prunes from this
+                    "attempts": atts,
+                    "elapsed_sec": round(_time.time() - t0, 3),
+                },
+                "docs": {"n_docs": n_docs},
             }
-        write_doc_stats(cat, field_names, sum_dl, n_docs)
-        cat.commit_stage("doc_stats")
+        )
 
-    stats_rows = spark.read.parquet(cat.path(IndexCatalog.DOC_STATS)).collect()
-    avgdl = {r["field"]: float(r["avgdl"]) for r in stats_rows}
-    # pin the avgdl the postings blocks' max_norm is ENCODED with: appends
-    # keep encoding with this constant while the live avgdl drifts, and the
-    # evaluator applies a per-field safety factor max(1, live/encoded) to
-    # its block-max bounds so pruning stays exact under drift
-    if cat.get_meta("encode_avgdl") is None:
-        cat.set_meta("encode_avgdl", avgdl)
+    # -- step 3: per-field doc stats (N, avgdl) — tiny driver-built table --
+    # 4 rows: written directly with pyarrow (a Spark job for this pays the
+    # python-RDD createDataFrame warmup for nothing; Spark reads it fine).
+    # The avgdl the postings blocks' max_norm is ENCODED with is pinned in
+    # the same commit: appends keep encoding with this constant while the
+    # live avgdl drifts, and the evaluator applies a per-field safety
+    # factor max(1, live/encoded) to its block-max bounds so pruning stays
+    # exact under drift
+    if not cat.stage_done("doc_stats"):
+        sum_dl = cat.manifest()["stages"]["staging"]["metrics"]["sum_dl"]
+        avgdl = write_doc_stats(cat, field_names, sum_dl, n_docs)
+        cat.commit(stages={"doc_stats": {}}, meta={"encode_avgdl": avgdl})
+    avgdl = cat.get_meta("encode_avgdl")
 
-    # -- stage 3b: DOCMAP — per-band ord -> doc_id arrays + dl sidecars ----
+    # -- step 6's work: DOCMAP — per-band ord -> doc_id arrays + dl sidecars
     # ford = -1 rows carry the band's packed int64 doc_ids (ord order);
     # ford = k rows carry the band's packed int32 per-doc lengths of field
     # k (dense by ord, 0 where the doc has no tokens in the field) — the
@@ -2017,7 +1872,7 @@ def build_index(
     # varbyte per POSTING in the blocks.  Rows are chunked so no parquet
     # cell or eval allocation exceeds ~2 MB even for giant bands.
     def _docmap_action():
-        _reprune_staged()
+        _reconcile_staged(cat)
         docs_df = spark.read.parquet(cat.path(IndexCatalog.DOCS)).select(
             "ord", "doc_id"
         )
@@ -2031,14 +1886,14 @@ def build_index(
             IndexCatalog.DOCMAP,
         )
 
-    # -- stage 4: dictionary (df/cf), ONE job for every bucket --------------
+    # -- step 4's work: dictionary (df/cf), ONE job for every bucket --------
     # numeric groupBy over PACKED runs (one row per (term, split) — the agg
     # input is ~|vocab x splits| rows, not one per posting); the term
     # string (exactly once per run) is recovered with max() — a declarative
     # agg, so the whole stage codegens (first() would force
     # ObjectHashAggregate)
     def _dictionary_action():
-        _reprune_staged()
+        _reconcile_staged(cat)
         staged = spark.read.parquet(cat.path(IndexCatalog.STAGING)).where(
             F.col("kind") == 0
         )
@@ -2103,185 +1958,83 @@ def build_index(
             },
         }
 
-    # docmap AND dictionary Spark ACTIONS both overlap the postings stage
+    # docmap AND dictionary Spark ACTIONS both overlap the postings job
     # below: both read only committed staging (+docs), and the postings
     # job's only two dictionary inputs are (a) the heavy-term salt map —
     # recomputed equivalently from staging (df == sum(n) per term_id, the
-    # exact expression the dictionary aggregates) by the single-job path —
-    # and (b) terms_per_bucket, which is commit-metric-only and is joined
-    # via `dict_ready` right before the per-bucket commits (the ~11 s
-    # dictionary wall at 16c otherwise serializes before the merge).
-    # COMMITS stay on this thread (manifest read-modify-write is not
-    # thread-safe): dictionary commits inside dict_ready(), docmap after
-    # the postings stage; a crash mid-postings re-runs them on resume.
-    # Trade-off: a term_id-collision error from the dictionary stage now
-    # surfaces only at dict_ready() — after merge work has run — but the
-    # build still fails loudly before any bucket commits.
-    bg_pool = None
-    docmap_fut = None
-    dict_fut = None
+    # exact expression the dictionary aggregates) — and (b)
+    # terms_per_bucket, which is commit-metric-only and is read after the
+    # dictionary commits (the ~11 s dictionary wall at 16c otherwise
+    # serializes before the merge).  COMMITS stay on this thread, in a
+    # fixed order: dictionary (step 4), postings (step 5), docmap (step 6).
+    # Trade-off: a term_id-collision error from the dictionary stage
+    # surfaces only after the merge work has run — but the build still
+    # fails loudly before the postings commit.
     bg_todo = [
-        ("docmap", _docmap_action),
-        ("dictionary", _dictionary_action),
+        (n, a)
+        for n, a in (("docmap", _docmap_action), ("dictionary", _dictionary_action))
+        if not cat.stage_done(n)
     ]
-    bg_todo = [(n, a) for n, a in bg_todo if not cat.stage_done(n)]
-    if bg_todo:
-        import time as _time
-        from concurrent.futures import ThreadPoolExecutor as _TPE
 
-        def _timed_stage(action):
-            def run():
-                t0 = _time.time()
-                m = action() or {}
-                m.setdefault("elapsed_sec", round(_time.time() - t0, 3))
-                m["overlapped_postings"] = True
-                return m
+    def _timed_stage(action):
+        def run():
+            t0 = _time.time()
+            m = action() or {}
+            m["elapsed_sec"] = round(_time.time() - t0, 3)
+            return m
 
-            return run
+        return run
 
-        bg_pool = _TPE(max_workers=len(bg_todo), thread_name_prefix="bgstage")
-        futs = {n: bg_pool.submit(_timed_stage(a)) for n, a in bg_todo}
-        docmap_fut = futs.get("docmap")
-        dict_fut = futs.get("dictionary")
+    bg_pool = _TPE(max_workers=2, thread_name_prefix="bgstage")
+    futs = {n: bg_pool.submit(_timed_stage(a)) for n, a in bg_todo}
 
-    def dict_ready() -> None:
-        """Join + commit the overlapped dictionary stage (main thread only);
-        no-op once committed.  Postings code calls this before anything
-        that reads the dictionary table or its terms_per_bucket metrics."""
-        nonlocal dict_fut
-        if dict_fut is not None:
-            fut, dict_fut = dict_fut, None
-            try:
-                m = fut.result() or {}
-            except Exception as e:
-                # attribute to the true stage — without this the postings
-                # try-block reports a dictionary error as a postings failure
-                raise RuntimeError(
-                    "overlapped dictionary stage failed"
-                ) from e
-            cat.commit_stage("dictionary", m)
-
-    postings_err = None
-    try:
-        # -- stage 5: per-bucket postings build (resumable loop) ----------------
-        # one Spark job per bucket; metrics come from Observation (no read-back)
-        avgdl_ord = np.array([avgdl.get(fn, 1.0) for fn in field_names], dtype=np.float64)
-        ord_bits = ord_bits_of(n_docs)
-        done = cat.committed_buckets()
-        todo = [b for b in range(config.n_term_buckets) if b not in done]
-        builder = make_merge_builder(
-            float(n_docs), avgdl_ord, config.k1, config.b,
-            config.block_size, ord_shift,
-        )
-        if todo:
-            _reprune_staged()
-        if todo and not config.bucket_resume:
-            _build_postings_single_job(
-                spark, cat, config, builder, ord_bits, dict_ready=dict_ready
-            )
-            todo = []
-        if todo:
-            import threading
-            from concurrent.futures import ThreadPoolExecutor
-
-            # the per-bucket loop reads the dictionary TABLE (per-bucket
-            # heavy maps) — join the overlapped stage before starting
-            dict_ready()
-
-            staged_all = spark.read.parquet(cat.path(IndexCatalog.STAGING)).where(
-                F.col("kind") == 0
-            )
-            dict_all = cat.read(spark, IndexCatalog.DICTIONARY)
-            terms_per_bucket = {
-                int(r["bucket"]): int(r["n"])
-                for r in dict_all.groupBy("bucket").agg(F.count("*").alias("n")).collect()
-            }
-            manifest_lock = threading.Lock()
-
-            def do_bucket(bucket: int) -> None:
-                # ALL-NUMERIC from here on: parquet column pruning drops the
-                # term string column of staging; the field ordinal rides
-                # staging and only the bounded heavy-term salt map is applied
-                staged_b = staged_all.where(F.col("bucket") == bucket)
-                n_terms = terms_per_bucket.get(bucket, 0)
-                heavy_b = _heavy_salt_map(
-                    dict_all.where(F.col("bucket") == bucket), config
-                )
-                salted = _salt_packed_runs(staged_b, heavy_b, ord_bits)
-                # enough tasks per job that concurrent bucket jobs can fill
-                # freed slots (finer granularity costs little; too-coarse tasks
-                # leave cores idle during each job's tail); data-scaled so
-                # per-task memory stays bounded at any corpus size
-                n_parts = max(
-                    spark.sparkContext.defaultParallelism, 8,
-                    _merge_partitions(
-                        spark, cat, config, frac=1.0 / config.n_term_buckets
-                    ),
-                )
-                blocks = (
-                    salted.repartition(n_parts, "term_id", "salt")
-                    .mapInArrow(builder, BLOCKS_SCHEMA)
-                )
-                obs = Observation(f"bucket_{bucket}")
-                blocks = blocks.observe(
-                    obs, F.count(F.lit(1)).alias("blocks"), F.sum("n").alias("postings")
-                )
-                cat.write(blocks, IndexCatalog.POSTINGS, bucket=bucket)
-                m = obs.get
-                with manifest_lock:
-                    cat.commit_bucket(
-                        bucket,
-                        {
-                            "blocks": int(m["blocks"]),
-                            "postings": int(m["postings"]),
-                            "terms": int(n_terms),
-                            "bytes": cat.table_bytes(
-                                f"{IndexCatalog.POSTINGS}/bucket={bucket}"
-                            ),
-                        },
-                    )
-
-            # concurrent bucket jobs (the reference runs 5 categorisation
-            # batches concurrently, FullReindexCategoriser.cs:87-213) — Spark's
-            # scheduler interleaves them, hiding each job's serial phases;
-            # commits stay per-bucket, so kill/resume granularity is unchanged
-            workers = min(config.build_parallelism, len(todo))
-            if workers <= 1:
-                for bkt in todo:
-                    do_bucket(bkt)
-            else:
-                with ThreadPoolExecutor(max_workers=workers) as ex:
-                    futures = [ex.submit(do_bucket, bkt) for bkt in todo]
-                    for f in futures:
-                        f.result()
-    except Exception as e:
-        postings_err = e
-    # join + commit any still-overlapped background stages (dictionary is
-    # normally already joined via dict_ready inside the postings stage; it
-    # is still pending here when postings was fully resumed-from-manifest
-    # or failed early).  The postings error, if any, is the primary
-    # failure; background-stage errors surface otherwise.
-    bg_err = None
-    for _name, _fut in (("dictionary", dict_fut), ("docmap", docmap_fut)):
-        if _fut is None:
-            continue
-        if postings_err is not None:
-            # surface the postings failure promptly: cancel not-yet-started
-            # background stages and ABANDON running ones (their Spark action
-            # finishes in the pool thread, result discarded, stage left
-            # uncommitted — resume re-runs it) instead of blocking on them
-            _fut.cancel()
-            continue
+    def _commit_overlapped(name: str) -> None:
+        fut = futs.get(name)
+        if fut is None:  # committed by an earlier run
+            return
         try:
-            cat.commit_stage(_name, _fut.result() or {})
+            m = fut.result()
         except Exception as e:
-            if bg_err is None:
-                bg_err = e
-    if bg_pool is not None:
-        bg_pool.shutdown(wait=False)
-    if postings_err is not None:
-        raise postings_err
-    if bg_err is not None:
-        raise bg_err
-    cat.commit_stage("complete")
+            # attribute to the true stage — without this a dictionary
+            # error reads as a postings failure
+            raise RuntimeError(f"overlapped {name} stage failed") from e
+        cat.commit(stages={name: m})
+
+    try:
+        # -- step 5's work: ALL buckets in one Spark job -----------------------
+        postings = None
+        if not cat.manifest()["buckets"]:
+            _reconcile_staged(cat)
+            avgdl_ord = np.array(
+                [avgdl.get(fn, 1.0) for fn in field_names], dtype=np.float64
+            )
+            builder = make_merge_builder(
+                float(n_docs), avgdl_ord, config.k1, config.b,
+                config.block_size, ord_shift,
+            )
+            postings = _build_postings_single_job(
+                spark, cat, config, builder, ord_bits
+            )
+        # -- step 4: dictionary ---------------------------------------------
+        _commit_overlapped("dictionary")
+        # -- step 5: postings: attempts map + every bucket's lineage ---------
+        if postings is not None:
+            atts, buckets = postings
+            terms = cat.manifest()["stages"]["dictionary"]["metrics"][
+                "terms_per_bucket"
+            ]
+            for b, m in buckets.items():
+                m["terms"] = int(terms.get(str(b), 0))
+            # persisted so every reader open re-prunes non-committed
+            # attempt files (zombie speculative renames after the sweep)
+            cat.commit(buckets=buckets, meta={"postings_attempts": atts})
+        # -- step 6: docmap -------------------------------------------------
+        _commit_overlapped("docmap")
+    finally:
+        # a failed step still waits for the overlapped Spark actions, so a
+        # resume never races a still-running writer for the same dirs
+        bg_pool.shutdown(wait=True, cancel_futures=True)
+    # -- step 7: complete -----------------------------------------------------
+    if not cat.stage_done("complete"):
+        cat.commit(stages={"complete": {}})
     return cat

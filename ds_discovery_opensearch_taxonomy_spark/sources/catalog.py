@@ -1,12 +1,16 @@
 """Index catalog: manifest-committed parquet tables with per-bucket lineage.
 
 Stands in for the Iceberg catalog named by the north rule: each table is a
-parquet directory; the build commits term-hash buckets one at a time by
-atomically rewriting ``manifest.json`` (temp file + rename), recording
-per-bucket lineage + metrics (docs/terms/bytes).  A killed build resumes by
-skipping committed buckets (SURVEY.md §2.2 I7).  On a real cluster the same
-layout maps 1:1 onto Iceberg partitions + snapshot commits (``MERGE INTO``
-for the upsert sink).
+parquet directory, and ``manifest.json`` is the snapshot pointer.  Every
+manifest change is ONE read-modify-write that lands by atomic rename
+(temp file + ``os.replace``), as an Iceberg commit is one metadata swap.
+``build_index`` commits in seven such writes, one per step: ords with the
+index layout (format, band_bits, ord_bits); staging with docs; doc_stats
+with the encode avgdl; dictionary; postings (the attempts map plus every
+bucket's lineage metrics: blocks/postings/terms/bytes); docmap; complete.
+A killed build resumes by skipping the committed steps (SURVEY.md §2.2
+I7).  On a real cluster the same layout maps 1:1 onto Iceberg partitions
++ snapshot commits (``MERGE INTO`` for the upsert sink).
 """
 
 from __future__ import annotations
@@ -29,7 +33,6 @@ class IndexCatalog:
     DOCMAP = "docmap"
     DOC_STATS = "doc_stats"
     STAGING = "staging"
-    RESULTS = "results"
     #: incremental-append tables, one ``batch=<seq>`` partition per
     #: committed append (operators/index_append.py); readers union them
     #: with the main tables until a compaction folds them in
@@ -59,40 +62,29 @@ class IndexCatalog:
     def stage_done(self, stage: str) -> bool:
         return stage in self.manifest()["stages"]
 
-    def commit_stage(self, stage: str, metrics: dict | None = None) -> None:
+    def commit(
+        self,
+        stages: dict[str, dict] | None = None,
+        buckets: dict[int, dict] | None = None,
+        meta: dict | None = None,
+    ) -> None:
+        """ONE atomic manifest write (read-modify-write + ``os.replace``)
+        that commits every given stage (name -> metrics), postings bucket
+        (bucket -> lineage metrics) and index-layout property (``meta``
+        key -> value, e.g. band_bits — readers bind to the INDEX's layout,
+        not their own config).  Each build step is one such write, so a
+        crash leaves either the whole step or none of it committed."""
         m = self.manifest()
-        m["stages"][stage] = {"ts": time.time(), "metrics": metrics or {}}
-        self._write_manifest(m)
-
-    def set_meta(self, key: str, value) -> None:
-        """Record an index-layout property (e.g. band_bits) in the manifest
-        so readers bind to the INDEX's layout, not their own config."""
-        m = self.manifest()
-        m.setdefault("meta", {})[key] = value
+        ts = time.time()
+        for name, metrics in (stages or {}).items():
+            m["stages"][name] = {"ts": ts, "metrics": metrics or {}}
+        for b, metrics in (buckets or {}).items():
+            m["buckets"][str(int(b))] = {"ts": ts, **metrics}
+        m.setdefault("meta", {}).update(meta or {})
         self._write_manifest(m)
 
     def get_meta(self, key: str, default=None):
         return self.manifest().get("meta", {}).get(key, default)
-
-    def committed_buckets(self) -> set[int]:
-        return {int(b) for b in self.manifest()["buckets"]}
-
-    def commit_bucket(self, bucket: int, metrics: dict) -> None:
-        m = self.manifest()
-        m["buckets"][str(bucket)] = {"ts": time.time(), **metrics}
-        self._write_manifest(m)
-
-    def results_version(self) -> int:
-        """LEGACY single-dir results snapshot version (0 = none).  Kept so
-        pre-round-4 results tables stay readable; the first bucketed save
-        migrates them and zeroes this pointer."""
-        return int(self.manifest().get("results_version", 0))
-
-    def commit_results_version(self, version: int) -> None:
-        """Atomic pointer swap to a new legacy results snapshot."""
-        m = self.manifest()
-        m["results_version"] = int(version)
-        self._write_manifest(m)
 
     #: bucketed results layout (round 4): data lives under
     #: ``results_parts/v<snap>/bucket=<b>``; the manifest maps each doc_id-
@@ -103,7 +95,7 @@ class IndexCatalog:
 
     def results_buckets(self) -> dict[int, int]:
         """{bucket: owning snapshot} for the bucketed results table
-        (empty = legacy/no results)."""
+        (empty = no results)."""
         return {
             int(b): int(v)
             for b, v in self.manifest().get("results_buckets", {}).items()
@@ -118,13 +110,12 @@ class IndexCatalog:
         self,
         updates: dict[int, int],
         n_buckets: int,
-        drop_legacy: bool = False,
         superseded: dict[int, int] | None = None,
         keep: int = 0,
     ) -> list[tuple[int, int]]:
         """ONE atomic manifest write flips every touched bucket to its new
-        snapshot (and retires the legacy pointer on migration) — a crash
-        before it leaves the previous per-bucket view fully live.
+        snapshot — a crash before it leaves the previous per-bucket view
+        fully live.
 
         Snapshot retention (Iceberg snapshot-expiration analogue): each
         bucket's superseded versions are appended to a per-bucket retired
@@ -142,8 +133,6 @@ class IndexCatalog:
             m["results_snapshot"] = max(
                 int(m.get("results_snapshot", 0)), max(updates.values())
             )
-        if drop_legacy:
-            m["results_version"] = 0
         victims: list[tuple[int, int]] = []
         retired = m.setdefault("results_retired", {})
         for b, old in (superseded or {}).items():
@@ -153,10 +142,6 @@ class IndexCatalog:
                 victims.append((int(b), int(lst.pop(0))))
         self._write_manifest(m)
         return victims
-
-    def is_complete(self, n_buckets: int) -> bool:
-        m = self.manifest()
-        return "docs" in m["stages"] and len(m["buckets"]) >= n_buckets
 
     # -- incremental appends (delta batches) ---------------------------------
 
@@ -279,8 +264,8 @@ class IndexCatalog:
     def read(self, spark: SparkSession, table: str) -> DataFrame:
         p = self.root / self._resolve(table)
         if table in (self.POSTINGS, self.DICTIONARY) and not (p / "_SUCCESS").exists():
-            # bucket-partitioned directory tree, written bucket-at-a-time;
-            # enumerate real dirs (a literal "bucket=*" glob path makes
+            # bucket-partitioned tree from the task-direct writer (no
+            # top-level _SUCCESS marker); enumerate real dirs (a literal "bucket=*" glob path makes
             # Spark's FileStreamSink metadata probe log a spurious
             # FileNotFoundException stack on every read)
             parts = sorted(

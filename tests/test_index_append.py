@@ -380,12 +380,9 @@ def test_stream_payload_survives_refresh_invalidates_on_category_edit(
 
 def test_next_ord_commit_is_atomic_and_self_repairing(spark, tmp_path_factory):
     """A committed append advances next_ord in the SAME manifest write
-    (commit_delta), and a manifest left by the OLD two-write protocol
-    (batch committed, next_ord stale) self-repairs: the next append derives
-    the cursor from the committed deltas instead of reusing the committed
-    batch's ord range (duplicate ordinals -> wrong doc_id decode)."""
-    import json
-
+    (commit_delta), and the next append starts from that cursor instead
+    of reusing the committed batch's ord range (duplicate ordinals ->
+    wrong doc_id decode)."""
     out = tmp_path_factory.mktemp("atomic_ord")
     base = with_doc_ids(synthesize_corpus(spark, 120))
     full = with_doc_ids(synthesize_corpus(spark, 200))
@@ -398,11 +395,6 @@ def test_next_ord_commit_is_atomic_and_self_repairing(spark, tmp_path_factory):
     assert m1 is not None
     # next_ord landed in the commit itself
     assert eng.reader.cat.get_meta("next_ord") == m1["base_ord"] + m1["n_docs"]
-    # simulate the OLD crash window: commit present, next_ord stale
-    mp = out / "manifest.json"
-    m = json.loads(mp.read_text())
-    m["meta"]["next_ord"] = 120
-    mp.write_text(json.dumps(m))
     m2 = eng.append_docs(b2, batch_key="a2", auto_compact=False)
     assert m2 is not None
     # the second batch's ord range starts ABOVE the first (no reuse)
@@ -440,7 +432,7 @@ def test_compaction_remaps_arbitrary_salt_domains(spark, tmp_path_factory):
     b1 = full.join(b0.select("doc_id"), "doc_id", "left_anti")
     build_index(spark, b0, str(out), TEST_CONFIG)
     eng = TaxonomyEngine(spark, str(out), TEST_CONFIG)
-    eng.reader.cat.set_meta("next_delta_seq", 5)
+    eng.reader.cat.commit(meta={"next_delta_seq": 5})
     m1 = eng.append_docs(b1, batch_key="drift", auto_compact=False)
     assert m1 is not None and m1["seq"] == 5
     salts = {
@@ -486,83 +478,10 @@ def test_delta_salt_exhaustion_fails_loudly(spark, tmp_path_factory):
     base = with_doc_ids(synthesize_corpus(spark, 40))
     build_index(spark, base, str(out), TEST_CONFIG)
     eng = TaxonomyEngine(spark, str(out), TEST_CONFIG)
-    eng.reader.cat.set_meta("next_delta_seq", MAX_DELTA_SEQ + 1)
+    eng.reader.cat.commit(meta={"next_delta_seq": MAX_DELTA_SEQ + 1})
     extra = with_doc_ids(synthesize_corpus(spark, 41)).where("doc_id >= 40")
     with pytest.raises(RuntimeError, match="rebuild"):
         eng.append_docs(extra, batch_key="overflow", auto_compact=False)
-
-
-def test_append_derives_stats_base_when_staging_metrics_missing(
-    spark, tmp_path_factory
-):
-    """Appending to an index whose staging metrics carry no sum_dl (a build
-    resumed from an older staging commit) must recompute the base from the
-    staging table instead of treating it as zero — otherwise the first
-    append rewrites doc_stats with delta-only sum_dl over the FULL n_docs,
-    collapsing avgdl and corrupting every BM25 score."""
-    import json
-
-    out = tmp_path_factory.mktemp("nostats")
-    base = with_doc_ids(synthesize_corpus(spark, 120))
-    full = with_doc_ids(synthesize_corpus(spark, 160))
-    build_index(spark, base, str(out), TEST_CONFIG)
-    mp = out / "manifest.json"
-    m = json.loads(mp.read_text())
-    m["stages"]["staging"]["metrics"].pop("sum_dl", None)
-    mp.write_text(json.dumps(m))
-    eng = TaxonomyEngine(spark, str(out), TEST_CONFIG)
-    extra = full.join(base.select("doc_id"), "doc_id", "left_anti")
-    assert eng.append_docs(extra, batch_key="ns1", auto_compact=False) is not None
-    pinned = eng.reader.cat.get_meta("stats_base")
-    assert pinned is not None and pinned["n_docs"] == 120
-    assert all(v > 0 for v in pinned["sum_dl"].values())
-    rows = [r.asDict() for r in full.collect()]
-    oracle = OracleIndex(
-        [
-            build_oracle_doc(
-                r["doc_id"], r, TEST_CONFIG,
-                doc_ref=f'{r["repo"]}/{r["path"]}/{r["commit"]}',
-            )
-            for r in rows
-        ],
-        TEST_CONFIG,
-    )
-    # scores exact => avgdl/N folded base + delta correctly
-    _parity(spark, eng, oracle, QUERIES[:3], scored=True)
-
-
-def test_append_pins_encode_avgdl_when_missing(spark, tmp_path_factory):
-    """Appending to a pre-round-3 index (no pinned encode_avgdl) must pin
-    the CURRENT stats, not default to 1.0 — an avgdl=1 encode underestimates
-    max_norm and breaks top-k pruning exactness."""
-    import json
-
-    out = tmp_path_factory.mktemp("oldmeta")
-    base = with_doc_ids(synthesize_corpus(spark, 120))
-    full = with_doc_ids(synthesize_corpus(spark, 160))
-    build_index(spark, base, str(out), TEST_CONFIG)
-    # simulate a pre-round-3 manifest
-    mp = out / "manifest.json"
-    m = json.loads(mp.read_text())
-    m["meta"].pop("encode_avgdl", None)
-    mp.write_text(json.dumps(m))
-    eng = TaxonomyEngine(spark, str(out), TEST_CONFIG)
-    extra = full.join(base.select("doc_id"), "doc_id", "left_anti")
-    assert eng.append_docs(extra, batch_key="old", auto_compact=False) is not None
-    pinned = eng.reader.cat.get_meta("encode_avgdl")
-    assert pinned and all(v > 1.0 for v in pinned.values())
-    rows = [r.asDict() for r in full.collect()]
-    oracle = OracleIndex(
-        [
-            build_oracle_doc(
-                r["doc_id"], r, TEST_CONFIG,
-                doc_ref=f'{r["repo"]}/{r["path"]}/{r["commit"]}',
-            )
-            for r in rows
-        ],
-        TEST_CONFIG,
-    )
-    _parity(spark, eng, oracle, QUERIES[:3], scored=True, top_k=5)
 
 
 def test_auto_compaction_triggers_at_threshold(spark, tmp_path_factory):

@@ -15,13 +15,7 @@ from ds_discovery_opensearch_taxonomy_spark.sources.corpus import (
     with_doc_ids,
 )
 
-# build_parallelism=1: the kill-after-2-commits test needs deterministic
-# commit order (concurrent workers would commit later buckets before the
-# injected failure propagates)
-CFG = EngineConfig(
-    n_term_buckets=4, salt_target_postings=64, n_eval_bands=2,
-    build_parallelism=1, bucket_resume=True,
-)
+CFG = EngineConfig(n_term_buckets=4, salt_target_postings=64, n_eval_bands=2)
 N = 250
 
 
@@ -34,50 +28,110 @@ class InterruptedBuild(Exception):
     pass
 
 
-def test_resume_after_kill(spark, corpus, tmp_path):
-    """Kill the build after 2 of 4 bucket commits; resume must skip the
-    committed buckets and produce an index identical to an uninterrupted
-    build."""
-    full_dir = tmp_path / "full"
-    build_index(spark, corpus, str(full_dir), CFG)
+def _rows(df):
+    """Order-free multiset of a table's rows (binary cells as bytes)."""
+    from collections import Counter
 
-    part_dir = tmp_path / "partial"
-    orig_commit = IndexCatalog.commit_bucket
-    calls = {"n": 0}
+    return Counter(
+        tuple(bytes(v) if isinstance(v, (bytearray, memoryview)) else v for v in r)
+        for r in df.collect()
+    )
 
-    def killing_commit(self, bucket, metrics):
-        orig_commit(self, bucket, metrics)
-        calls["n"] += 1
-        if calls["n"] == 2:
+
+def _index_content(spark, idx_dir):
+    cat = IndexCatalog(idx_dir)
+    return {
+        "postings": _rows(cat.read(spark, IndexCatalog.POSTINGS)),
+        "dictionary": _rows(cat.read(spark, IndexCatalog.DICTIONARY)),
+        "docs": _rows(
+            spark.read.parquet(cat.path(IndexCatalog.DOCS)).select("ord", "doc_id")
+        ),
+        "docmap": _rows(spark.read.parquet(cat.path(IndexCatalog.DOCMAP))),
+    }
+
+
+def _categorised(spark, idx_dir):
+    eng = TaxonomyEngine(spark, str(idx_dir), CFG)
+    return {r["doc_id"]: list(r["category_ids"]) for r in eng.categorise_all().collect()}
+
+
+def test_resume_after_kill(spark, corpus, tmp_path, monkeypatch):
+    """Crash matrix: kill the build at EVERY manifest write of a clean
+    build (the k+1-th write raises before it lands, after that step's
+    files were written), then resume.  Each resumed index must equal an
+    uninterrupted build's — postings, dictionary, docs (ord, doc_id) and
+    docmap — and categorise identically.  A clean build makes at most
+    seven manifest writes (one per build step)."""
+    orig_write = IndexCatalog._write_manifest
+    writes = {"n": 0, "allow": None}
+
+    def counting_write(self, m):
+        if writes["allow"] is not None and writes["n"] >= writes["allow"]:
             raise InterruptedBuild()
+        writes["n"] += 1
+        orig_write(self, m)
 
-    IndexCatalog.commit_bucket = killing_commit
-    try:
+    monkeypatch.setattr(IndexCatalog, "_write_manifest", counting_write)
+    ref_dir = tmp_path / "ref"
+    build_index(spark, corpus, str(ref_dir), CFG)
+    n_writes = writes["n"]
+    assert 0 < n_writes <= 7, n_writes
+    ref = _index_content(spark, ref_dir)
+    ref_cats = _categorised(spark, ref_dir)
+    assert any(ref_cats.values()), "fixture corpus must match some categories"
+
+    for k in range(n_writes):
+        part_dir = tmp_path / f"crash_{k}"
+        writes.update(n=0, allow=k)
         with pytest.raises(InterruptedBuild):
             build_index(spark, corpus, str(part_dir), CFG)
-    finally:
-        IndexCatalog.commit_bucket = orig_commit
+        assert writes["n"] == k
+        writes.update(n=0, allow=None)
+        build_index(spark, corpus, str(part_dir), CFG, resume=True)
+        m = IndexCatalog(part_dir).manifest()
+        assert "complete" in m["stages"], k
+        # the resume made exactly the writes the crash left undone
+        assert writes["n"] == n_writes - k, k
+        got = _index_content(spark, part_dir)
+        for table, rows in ref.items():
+            assert got[table] == rows, f"crash after {k} writes: {table} differs"
+        assert _categorised(spark, part_dir) == ref_cats, k
 
-    m = IndexCatalog(part_dir).manifest()
-    assert len(m["buckets"]) == 2 and "complete" not in m["stages"]
 
-    # resume: completes remaining buckets without redoing committed ones
-    committed_ts = {b: v["ts"] for b, v in m["buckets"].items()}
-    build_index(spark, corpus, str(part_dir), CFG, resume=True)
-    m2 = IndexCatalog(part_dir).manifest()
-    assert len(m2["buckets"]) == CFG.n_term_buckets and "complete" in m2["stages"]
-    for b, ts in committed_ts.items():
-        assert m2["buckets"][b]["ts"] == ts, "committed bucket was rebuilt"
+def test_pre_v6_manifest_refused_and_rebuilt(spark, corpus, tmp_path):
+    """A manifest of an older format (5) or with no format is refused by
+    IndexReader open and by append_docs with one "rebuild the index"
+    error, and build_index(resume=True) rebuilds it from scratch."""
+    from ds_discovery_opensearch_taxonomy_spark.operators.search import IndexReader
 
-    # identical index content (same block rows) and metrics
-    full = spark.read.parquet(str(full_dir / "postings")).drop("bucket")
-    part = spark.read.parquet(str(part_dir / "postings")).drop("bucket")
-    assert full.count() == part.count()
-    assert full.exceptAll(part).count() == 0
-    fm = IndexCatalog(full_dir).manifest()
-    assert sum(b["postings"] for b in fm["buckets"].values()) == sum(
-        b["postings"] for b in m2["buckets"].values()
-    )
+    idx = tmp_path / "old"
+    build_index(spark, corpus, str(idx), CFG)
+    eng = TaxonomyEngine(spark, str(idx), CFG)
+    want = _categorised(spark, idx)
+    mp = idx / "manifest.json"
+    current = json.loads(mp.read_text())
+    for fmt in (5, None):
+        m = json.loads(json.dumps(current))
+        if fmt is None:
+            del m["meta"]["format"]
+        else:
+            m["meta"]["format"] = fmt
+        mp.write_text(json.dumps(m))
+        with pytest.raises(RuntimeError, match="rebuild the index"):
+            IndexReader(spark, str(idx), CFG)
+        with pytest.raises(RuntimeError, match="rebuild the index"):
+            eng.append_docs(corpus.limit(5), batch_key=f"old{fmt}", auto_compact=False)
+        assert "deltas" not in json.loads(mp.read_text())
+        build_index(spark, corpus, str(idx), CFG, resume=True)
+        rebuilt = json.loads(mp.read_text())
+        assert rebuilt["meta"]["format"] == current["meta"]["format"]
+        # a rebuild, not a resume: every step was committed afresh
+        assert all(
+            st["ts"] > current["stages"]["complete"]["ts"]
+            for st in rebuilt["stages"].values()
+        )
+        current = rebuilt
+    assert _categorised(spark, idx) == want
 
 
 @pytest.fixture(scope="module")
@@ -201,16 +255,10 @@ def test_save_results_crash_between_write_and_swap(spark, engine, monkeypatch):
     (round-1 verdict: the old double-overwrite lost the table)."""
     from pyspark.sql import functions as F
 
-    if (
-        engine.reader.cat.results_version() == 0
-        and not engine.reader.cat.results_buckets()
-    ):  # self-sufficient solo run
+    if not engine.reader.cat.results_buckets():  # self-sufficient solo run
         engine.save_results(engine.categorise_all())
     before = {r["doc_id"]: r["category_ids"] for r in engine.results().collect()}
-    v_before = (
-        engine.reader.cat.results_version(),
-        engine.reader.cat.results_buckets(),
-    )
+    v_before = engine.reader.cat.results_buckets()
 
     boom = RuntimeError("injected crash before pointer swap")
     monkeypatch.setattr(
@@ -228,10 +276,7 @@ def test_save_results_crash_between_write_and_swap(spark, engine, monkeypatch):
     monkeypatch.undo()
 
     # old snapshot still live and byte-complete
-    assert (
-        engine.reader.cat.results_version(),
-        engine.reader.cat.results_buckets(),
-    ) == v_before
+    assert engine.reader.cat.results_buckets() == v_before
     after = {r["doc_id"]: r["category_ids"] for r in engine.results().collect()}
     assert after == before
 
@@ -327,83 +372,6 @@ def test_streaming_expanders():
     assert _expand_range(vocab, r) == ["ship", "shipment"]
     r2 = TermRangeNode("f", None, "sh", True, True)
     assert _expand_range(vocab, r2) == ["sh"]
-
-
-def _regress_manifest(idx_dir, keep_stages, drop_tables):
-    """Surgically rewind a completed index to a mid-build crash state:
-    keep only ``keep_stages`` in the manifest (plus no buckets), delete
-    ``drop_tables`` dirs.  Models indexes left by pre-docs-tee builds (the
-    two stages committed independently) and a crash between the tee
-    branch's two commit_stage writes."""
-    import shutil
-
-    cat = IndexCatalog(idx_dir)
-    m = cat.manifest()
-    m["stages"] = {k: v for k, v in m["stages"].items() if k in keep_stages}
-    m["buckets"] = {}
-    m.get("meta", {}).pop("postings_attempts", None)
-    cat._write_manifest(m)
-    for t in drop_tables:
-        shutil.rmtree(cat.path(t), ignore_errors=True)
-    return cat
-
-
-def _assert_same_postings(spark, ref_dir, got_dir):
-    ref = spark.read.parquet(str(ref_dir / "postings")).drop("bucket")
-    got = spark.read.parquet(str(got_dir / "postings")).drop("bucket")
-    assert ref.count() == got.count()
-    assert ref.exceptAll(got).count() == 0
-
-
-def test_resume_docs_committed_staging_not(spark, corpus, tmp_path):
-    """docs committed / staging not (a pre-tee-code crash between the two
-    concurrent stage commits): resume must take the legacy branch, rebuild
-    staging WITHOUT re-teeing docs, and converge to an identical index."""
-    ref_dir = tmp_path / "ref"
-    build_index(spark, corpus, str(ref_dir), CFG)
-
-    mix_dir = tmp_path / "mix_docs_first"
-    build_index(spark, corpus, str(mix_dir), CFG)
-    cat = _regress_manifest(
-        mix_dir,
-        keep_stages={"ords", "docs"},
-        drop_tables=["staging", "doc_stats", "docmap", "dictionary", "postings"],
-    )
-    import os
-
-    docs_before = sorted(os.listdir(cat.path("docs")))
-    build_index(spark, corpus, str(mix_dir), CFG, resume=True)
-    m = cat.manifest()
-    assert "complete" in m["stages"]
-    # the committed docs table was not rewritten by the resume
-    assert sorted(os.listdir(cat.path("docs"))) == docs_before
-    # the legacy staging rebuild must not have re-teed docs
-    assert not m["stages"]["staging"]["metrics"].get("docs_teed")
-    _assert_same_postings(spark, ref_dir, mix_dir)
-
-
-def test_resume_staging_committed_docs_not(spark, corpus, tmp_path):
-    """staging committed / docs not (a crash between the tee branch's two
-    commit_stage writes): the docs dir holds committed tee files but the
-    stage is uncommitted — resume rebuilds docs via the legacy JVM write
-    (overwrite clears the stale tee files) and converges."""
-    ref_dir = tmp_path / "ref2"
-    build_index(spark, corpus, str(ref_dir), CFG)
-
-    mix_dir = tmp_path / "mix_staging_first"
-    build_index(spark, corpus, str(mix_dir), CFG)
-    cat = _regress_manifest(
-        mix_dir,
-        keep_stages={"ords", "staging"},
-        drop_tables=["doc_stats", "docmap", "dictionary", "postings"],
-    )
-    build_index(spark, corpus, str(mix_dir), CFG, resume=True)
-    assert "complete" in cat.manifest()["stages"]
-    _assert_same_postings(spark, ref_dir, mix_dir)
-    # docs content equal to a fresh build's (ord alignment preserved)
-    ref_docs = spark.read.parquet(str(ref_dir / "docs")).select("ord", "doc_id")
-    got_docs = spark.read.parquet(str(mix_dir / "docs")).select("ord", "doc_id")
-    assert ref_docs.exceptAll(got_docs).count() == 0
 
 
 def test_results_reader_survives_saves_then_gc_beyond_horizon(spark, engine):

@@ -2,9 +2,10 @@
 
 Builds the index fresh (resume=False) with bench.py's exact config/corpus
 and prints per-stage wall times derived from the manifest's stage-commit
-timestamps (the derivation BENCH.md's round-3 stage table used).  Stage
-boundaries: ords | docs+staging (concurrent) | doc_stats |
-docmap+dictionary (concurrent) | postings merge+write.
+timestamps.  Stage boundaries: ords | docs+staging (one scan) | doc_stats |
+postings merge+write (ends at the postings commit).  Dictionary and docmap
+run beside the postings job, so theirs are the actions' own walls
+(``elapsed_sec`` in their commit metrics).
 
 Usage: python tools/build_decompose.py <cpus> [rows]
 Prints one JSON line; run each level in its own process (fresh JVM).
@@ -40,7 +41,7 @@ def main() -> None:
 
     spark = make_spark(str(cpus), shuffle_partitions=2 * cpus)
     config = EngineConfig(
-        n_term_buckets=8, n_eval_bands=16, build_parallelism=8,
+        n_term_buckets=8, n_eval_bands=16,
         salt_target_postings=20_000,
     )
     corpus_dir = REPO / ".scratch" / f"decompose_corpus_{rows}"
@@ -60,16 +61,17 @@ def main() -> None:
     cat = build_index(spark, corpus, str(out), config, resume=False)
     wall = time.time() - t0
 
-    st = cat.manifest()["stages"]
+    m = cat.manifest()
+    st = m["stages"]
     ts = {k: v["ts"] for k, v in st.items()}
+    postings_end = max(b["ts"] for b in m["buckets"].values())
     stages = {
         "ords": ts["ords"] - t0,
         "docs+staging": ts["staging"] - ts["ords"],
         "doc_stats": ts["doc_stats"] - ts["staging"],
-        "docmap+dictionary": max(ts["docmap"], ts["dictionary"])
-        - ts["doc_stats"],
-        "postings_merge": ts["complete"]
-        - max(ts["docmap"], ts["dictionary"]),
+        "postings_merge": postings_end - ts["doc_stats"],
+        "dictionary_overlapped": st["dictionary"]["metrics"]["elapsed_sec"],
+        "docmap_overlapped": st["docmap"]["metrics"]["elapsed_sec"],
     }
     print(
         json.dumps(
