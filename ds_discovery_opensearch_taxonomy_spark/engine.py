@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from ds_discovery_opensearch_taxonomy_spark.config import EngineConfig
@@ -299,7 +299,19 @@ class TaxonomyEngine:
         the reference's useDefaultTaxonomyField=false path
         (OpenSearchIAViewRepository.PerformSearch:151-186).  A blank query
         matches everything (MatchAllQuery substitution,
-        OpenSearchConnection.SetupSearchRequest:252-255)."""
+        OpenSearchConnection.SetupSearchRequest:252-255).
+
+        Without filters or sort, a query the local executor accepts (one
+        category, no wildcard/range/metadata clause, estimated postings at
+        most ``search._LOCAL_MAX_POSTINGS``; see ``run_categories``) is
+        answered in the driver: its final rows — min_score-filtered,
+        score desc then doc_id asc, cut at offset+limit — come back as a
+        driver-local DataFrame, no Spark job once the query is compiled.
+        Every other search runs on the Spark executor."""
+        if not (filters or sort_by):
+            rows = self._local_search(query_text, min_score, limit, offset, fields)
+            if rows is not None:
+                return search_ops.local_frame(self.spark, rows)
         query_text = self._effective_query(query_text)
         config = self._search_config(fields)
         # filters compile to FILTER-context virtual clauses that prune
@@ -360,19 +372,37 @@ class TaxonomyEngine:
             .limit(offset + limit)
         )
 
+    def _local_search(
+        self, query_text: str, min_score: float, limit: int, offset: int,
+        fields: list[str] | dict[str, float] | None = None,
+    ):
+        """The local executor's final search rows (pandas), or None when
+        the query must run on Spark."""
+        rows = search_ops.run_local(
+            self.reader,
+            [("__q", self._effective_query(query_text))],
+            scored=True,
+            top_k=offset + limit,
+            config=self._search_config(fields),
+        )
+        return None if rows is None else rows[rows["score"] >= min_score]
+
     def search_page(self, query_text: str, min_score: float = 0.0, limit: int = 10, offset: int = 0):
-        rows = self.search(query_text, min_score, limit, offset).collect()
+        rows = self._local_search(query_text, min_score, limit, offset)
+        if rows is None:
+            rows = self.search(query_text, min_score, limit, offset).collect()
+        else:
+            rows = [Row(**r) for r in rows.to_dict("records")]
         return rows[offset : offset + limit]
 
     def count(self, query_text: str) -> int:
-        return (
-            search_ops.run_categories(
-                self.spark,
-                self.reader,
-                [("__q", self._effective_query(query_text))],
-                scored=False,
-            ).count()
-        )
+        pairs = [("__q", self._effective_query(query_text))]
+        rows = search_ops.run_local(self.reader, pairs, scored=False)
+        if rows is not None:
+            return len(rows)
+        return search_ops.run_categories(
+            self.spark, self.reader, pairs, scored=False
+        ).count()
 
     @staticmethod
     def _effective_query(query_text: str) -> str:

@@ -498,26 +498,19 @@ def compact_index(
         make_direct_block_writer,
     )
 
-    # remap domain comes from the DATA, not the manifest: every delta-era
-    # salt (>= COMPACTED_SALT_BASE) actually present in the view — earlier
-    # compacted generations in their dense slots, PLUS legacy generations
-    # compacted before this renumbering existed (those kept their original
-    # >= 2^20 salts), PLUS this interval's live deltas.  Sorted salt order
-    # equals ord order in every one of those regimes (seqs were monotone
-    # pre-renumber; dense slots are rank-assigned post-renumber), so one
-    # dense order-preserving renumber is exact for all of them and
-    # self-heals legacy indexes.  The distinct scan is bounded by the
-    # number of generations, one narrow column off a table compaction
-    # full-scans anyway.
+    # remap domain from the MANIFEST: the earlier compacted generations in
+    # their dense slots [COMPACTED_SALT_BASE, + meta.compacted_salts) plus
+    # this interval's committed deltas, each at delta_salt(seq).  Sorted
+    # salt order is ord order (dense slots are rank-assigned; delta seqs
+    # are monotone within the interval), so one dense order-preserving
+    # renumber is exact.  Format 6 indexes never hold the pre-renumber raw
+    # >= 2^20 salts older compactions kept, so no data scan is needed.
+    n_compacted = int(cat.get_meta("compacted_salts", 0))
     old_salts = np.array(
-        sorted(
-            int(r["salt"])
-            for r in postings_view(spark, cat)
-            .where(F.col("salt") >= COMPACTED_SALT_BASE)
-            .select("salt")
-            .distinct()
-            .collect()
-        ),
+        [
+            *range(COMPACTED_SALT_BASE, COMPACTED_SALT_BASE + n_compacted),
+            *(delta_salt(s) for s in cat.delta_seqs()),
+        ],
         dtype=np.int64,
     )
     if COMPACTED_SALT_BASE + len(old_salts) > DELTA_SALT_BASE:
@@ -539,8 +532,8 @@ def compact_index(
                 if len(old_salts) == 0:
                     raise RuntimeError(
                         "postings view contains a delta-era salt but the "
-                        "remap domain scan saw none (a concurrent append?) "
-                        "— refusing to compact"
+                        "manifest's remap domain is empty — refusing to "
+                        "compact"
                     )
                 idx = np.searchsorted(old_salts, salt[m])
                 ok = (idx < len(old_salts)) & (

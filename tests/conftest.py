@@ -29,3 +29,50 @@ def spark():
     )
     s.sparkContext.setLogLevel("WARN")
     yield s
+
+
+def assert_executors_agree(spark, reader, pairs):
+    """Differential check of the two executors: every category of
+    ``pairs`` run ALONE (compile warm) must return exactly its
+    ``(doc_id, score)`` rows from ONE Spark batch run of all of them, in
+    scored top-100 and bool modes.  A category whose compiled node has no
+    distributed wildcard/range expansion and no virtual (metadata) clause
+    must take the local executor and launch no Spark job; any other must
+    run on Spark.  Returns the number of local single runs."""
+    from ds_discovery_opensearch_taxonomy_spark.operators import search as so
+
+    sc = spark.sparkContext
+    n_local = 0
+    for scored, top_k in ((True, 100), (False, None)):
+        want: dict = {}
+        for r in so.run_categories(
+            spark, reader, pairs, scored=scored, top_k=top_k
+        ).collect():
+            want.setdefault(r["category_id"], []).append((r["doc_id"], r["score"]))
+        for cid, q in pairs:
+            compiled, _, df_map, _, _ = so.compile_queries(
+                reader, [(cid, q)], reader.config
+            )
+            node = compiled[cid]
+            virtual: dict = {}
+            so._collect_virtual_nodes(node, virtual)
+            simple = not virtual and not so.distributed_constructs(node)
+            assert so._local_eligible(node, df_map) == simple, cid
+            group = f"executors-{scored}-{cid}"
+            sc.setJobGroup(group, group)
+            try:
+                got = so.run_categories(
+                    spark, reader, [(cid, q)], scored=scored, top_k=top_k
+                ).collect()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+            assert sorted((r["doc_id"], r["score"]) for r in got) == sorted(
+                want.get(cid, [])
+            ), f"{cid} scored={scored}"
+            if simple:
+                assert n_jobs == 0, f"{cid}: local run launched {n_jobs} jobs"
+                n_local += 1
+            else:
+                assert n_jobs > 0, f"{cid}: expected the Spark executor"
+    return n_local

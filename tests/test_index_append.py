@@ -8,6 +8,7 @@ Reference contract: daily-update docs land in the live OpenSearch index
 import math
 
 import pytest
+from conftest import assert_executors_agree
 
 from ds_discovery_opensearch_taxonomy_spark.config import EngineConfig
 from ds_discovery_opensearch_taxonomy_spark.engine import TaxonomyEngine
@@ -135,6 +136,39 @@ def test_live_stats_updated(appended):
     eng, _, _ = appended
     assert eng.reader.n_docs == N_FULL
     assert all(f >= 1.0 for f in eng.reader.norm_safety.values())
+
+
+def test_executors_agree_with_live_delta_and_tombstones(spark, tmp_path_factory):
+    """Local vs Spark executor (see conftest.assert_executors_agree) on an
+    index with a LIVE delta holding new docs AND re-ingested doc_ids, whose
+    old ordinals are tombstoned: both executors must read the same main +
+    delta files and drop the same dead ords."""
+    out = tmp_path_factory.mktemp("index_reingest")
+    base = with_doc_ids(synthesize_corpus(spark, N_BASE))
+    full = with_doc_ids(synthesize_corpus(spark, N_FULL))
+    build_index(spark, base, str(out), TEST_CONFIG)
+    eng = TaxonomyEngine(spark, str(out), TEST_CONFIG)
+    old = [r.asDict() for r in base.orderBy("doc_id").collect()]
+    # 30 base doc_ids come back with another base doc's content
+    reingest = with_doc_ids(
+        spark.createDataFrame(
+            [
+                (r["repo"], r["path"], r["commit"], r["lang"], old[i + 100]["content"])
+                for i, r in enumerate(old[:30])
+            ],
+            "repo string, path string, commit string, lang string, content string",
+        )
+    )
+    batch = full.join(base.select("doc_id"), "doc_id", "left_anti").unionByName(
+        reingest, allowMissingColumns=True
+    )
+    assert eng.append_docs(batch, batch_key="mixed", auto_compact=False) is not None
+    assert eng.reader.cat.deltas()
+    assert eng.reader.docmap().where("ford = -2").count() > 0
+    assert eng.reader.n_docs == N_FULL + 30  # tombstoned docs count until compaction
+    pairs = [(c["category_id"], c["query_text"]) for c in load_categories()]
+    assert assert_executors_agree(spark, eng.reader, pairs) >= 2 * 100
+    assert_executors_agree(spark, eng.reader, QUERIES)
 
 
 def test_update_supersedes_old_version(spark, tmp_path_factory):
@@ -414,12 +448,11 @@ def test_next_ord_commit_is_atomic_and_self_repairing(spark, tmp_path_factory):
 
 
 def test_compaction_remaps_arbitrary_salt_domains(spark, tmp_path_factory):
-    """The remap domain is derived from the DATA (distinct salts >= 2^16
-    in the view), not assumed dense-from-base — so a legacy index whose
-    earlier compactions kept raw >= 2^20 salts in the main table, or any
-    seq drift, renumbers correctly.  Emulated by starting the seq counter
-    at 5: the folded salts are high and non-dense, and must land at the
-    dense base with the counter reset."""
+    """The remap domain (from the manifest: the dense compacted slots plus
+    delta_salt(seq) of every committed delta) is not assumed to start at
+    seq 0 — any seq drift renumbers correctly.  Emulated by starting the
+    seq counter at 5: the folded salts are high and non-dense, and must
+    land at the dense base with the counter reset."""
     from ds_discovery_opensearch_taxonomy_spark.operators.index_append import (
         COMPACTED_SALT_BASE,
         DELTA_SALT_BASE,

@@ -5,6 +5,7 @@ score parity with the brute-force oracle (SURVEY.md §5 items 3-4)."""
 import math
 
 import pytest
+from conftest import assert_executors_agree
 
 from ds_discovery_opensearch_taxonomy_spark.config import EngineConfig, FieldSpec
 from ds_discovery_opensearch_taxonomy_spark.operators.index_build import build_index
@@ -189,6 +190,44 @@ def test_all_136_categories_parity(built, spark):
             n_matched_categories += 1
     # the fragment-salted corpus must exercise a healthy share of categories
     assert n_matched_categories >= 25, n_matched_categories
+
+
+def test_executors_agree_on_all_136_categories(built, spark):
+    """Local vs Spark executor on every fixture category (scored top-100
+    and bool sets, exact (doc_id, score) equality), plus the ineligible
+    synthetic shapes — wildcard, range, metadata, match-all — which must
+    route to Spark."""
+    _, _, reader, _ = built
+    pairs = [(c["category_id"], c["query_text"]) for c in load_categories()]
+    n_local = assert_executors_agree(spark, reader, pairs)
+    assert n_local >= 2 * 100, n_local  # most fixture categories run locally
+    assert assert_executors_agree(spark, reader, SYNTHETIC) < 2 * len(SYNTHETIC)
+
+
+def test_local_searches_keep_persisted_rdds_bounded(built, spark):
+    """50 distinct local-eligible single-term searches on one reader add
+    no persisted RDD (the local executor persists nothing per query)."""
+    from ds_discovery_opensearch_taxonomy_spark.engine import TaxonomyEngine
+
+    cat, _, _, _ = built
+    eng = TaxonomyEngine(spark, str(cat.root), TEST_CONFIG)
+    terms = [
+        r["term"]
+        for r in eng.reader.dictionary()
+        .where("field = 'textnocasnopunc' AND term RLIKE '^[a-z]{4,}$'")
+        .orderBy("term")
+        .limit(51)
+        .collect()
+    ]
+    assert len(terms) == 51
+    eng.search(terms[0]).collect()  # the reader's own tables persist here
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    for t in terms[1:]:
+        assert eng.search(t, limit=5).collect()
+    assert jsc.getPersistentRDDs().size() == before
+    eng.reader.unpersist()
+    assert not eng.reader._local_sidecars and eng.reader._local_ds is None
 
 
 def test_air_force_reference_doc(built, spark):

@@ -3,11 +3,11 @@
 The driver-window categorise numbers on this host swing with external
 load, so kernel changes can't be judged from end-to-end walls alone.
 This tool replays ONE (chunk, band) eval group's exact shuffled input
-(dumped by eval_group under SPARK_GRAFT_EVAL_DUMP) through the same
-evaluator construction eval_group performs, single-threaded, and
-reports per-category medians over N repeats plus an optional cProfile
-breakdown — pure kernel CPU, no Spark scheduling or memory-bandwidth
-contention from sibling tasks.
+(dumped by eval_group under SPARK_GRAFT_EVAL_DUMP) through the band
+kernel both executors run (operators/search.eval_band), single-threaded,
+and reports per-category medians over N repeats plus an optional
+cProfile breakdown — pure kernel CPU, no Spark scheduling or
+memory-bandwidth contention from sibling tasks.
 
 Usage:
   1. dump:    SPARK_GRAFT_EVAL_DUMP=/tmp/evaldump python tools/eval_decompose.py 32
@@ -23,7 +23,6 @@ import sys
 import time
 from pathlib import Path
 
-import numpy as np
 import pandas as pd
 
 REPO = Path(__file__).resolve().parent.parent
@@ -68,70 +67,26 @@ def main() -> None:
     chunk_cids: dict[int, list[str]] = {}
     for i, cid in enumerate(sorted_cids):
         chunk_cids.setdefault(i // chunk_size, []).append(cid)
-    cids = chunk_cids[chunk]
-    nodes = {cid: compiled[cid] for cid in cids}
-    needs_pos = any(so._node_has_phrase(n) for n in nodes.values())
-
-    n_docs = float(reader.n_docs)
-    avgdl = dict(reader.avgdl)
-    norm_safety = dict(reader.norm_safety)
-    ord_shift = reader.ord_shift
-    field_names = [f.name for f in config.fields]
-    pdf = pd.read_parquet(group_path)
+    nodes = {cid: compiled[cid] for cid in chunk_cids[chunk]}
+    params = so.kernel_params(reader, config, scored, None)
+    blocks, sidecars = so.split_group(pd.read_parquet(group_path))
     spark.stop()  # everything below is pure numpy/pandas
 
-    def build_ev():
-        rows_by_term = {
-            int(t): rows for t, rows in pdf.groupby("term_id", sort=False)
-        }
-        dm_rows = rows_by_term.pop(so.DOCMAP_TID, None)
-        band_start = np.int64(band) << np.int64(ord_shift)
-        dl_by_field: dict[str, np.ndarray] = {}
-        dead = None
-        if dm_rows is not None:
-            for ford_v, gr in dm_rows.groupby("salt", sort=False):
-                buf = b"".join(gr.sort_values("blk_seq")["docids"])
-                if int(ford_v) == -2:
-                    dead = np.unique(np.frombuffer(buf, dtype="<i8"))
-                elif int(ford_v) < 0:
-                    pass  # ordmap: not needed for kernel timing
-                else:
-                    dl_by_field[field_names[int(ford_v)]] = np.frombuffer(
-                        buf, dtype="<i4"
-                    )
-        ev = so._Evaluator(
-            rows_by_term, df_map, n_docs, config.k1, config.b, avgdl,
-            scored, needs_pos, tid_map, dl_by_field, int(band_start),
-            dead=dead, norm_safety=norm_safety,
+    def one_pass():
+        # a fresh evaluator (and decode cache) per pass: real cost shape
+        stats: dict = {}
+        out = so.eval_band(
+            band, nodes, blocks, sidecars, df_map, tid_map, params, stats
         )
-        if "vkeys" in pdf.columns:
-            cmap: dict[str, set[int]] = {}
-            vk_col = pdf["vkeys"]
-            mask = vk_col.map(lambda v: v is not None and len(v) > 0)
-            for tid_v, vk in zip(pdf.loc[mask, "term_id"].to_numpy(), vk_col[mask]):
-                for k in vk:
-                    cmap.setdefault(k, set()).add(int(tid_v))
-            ev.construct_tids = {k: sorted(v) for k, v in cmap.items()}
-        return ev
-
-    def one_pass(ev):
-        walls = {}
-        total_matches = 0
-        for cid in cids:
-            t0 = time.perf_counter()
-            ids, _ = ev.eval(nodes[cid])
-            walls[cid] = time.perf_counter() - t0
-            total_matches += len(ids)
-        return walls, total_matches
+        return stats["cid_walls"], len(out)
 
     if profile:
         import cProfile
         import pstats
 
-        ev = build_ev()
         pr = cProfile.Profile()
         pr.enable()
-        one_pass(ev)
+        one_pass()
         pr.disable()
         pstats.Stats(pr).sort_stats("cumulative").print_stats(25)
         return
@@ -139,13 +94,12 @@ def main() -> None:
     runs = []
     matches = None
     for _ in range(repeat):
-        ev = build_ev()  # fresh decode cache each repeat (real cost shape)
         t0 = time.perf_counter()
-        walls, matches = one_pass(ev)
+        walls, matches = one_pass()
         runs.append((time.perf_counter() - t0, walls))
     med_total = statistics.median(r[0] for r in runs)
     per_cid = {
-        cid: statistics.median(r[1][cid] for r in runs) for cid in cids
+        cid: statistics.median(r[1][cid] for r in runs) for cid in nodes
     }
     top = sorted(per_cid.items(), key=lambda kv: -kv[1])[:12]
     print(
