@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from pathlib import Path
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ds_discovery_opensearch_taxonomy_spark.config import EngineConfig
@@ -301,19 +301,26 @@ class TaxonomyEngine:
         matches everything (MatchAllQuery substitution,
         OpenSearchConnection.SetupSearchRequest:252-255).
 
-        Without filters or sort, a query the local executor accepts (one
-        category, no wildcard/range/metadata clause, estimated postings at
-        most ``search._LOCAL_MAX_POSTINGS``; see ``run_categories``) is
-        answered in the driver: its final rows — min_score-filtered,
-        score desc then doc_id asc, cut at offset+limit — come back as a
-        driver-local DataFrame, no Spark job once the query is compiled.
-        Every other search runs on the Spark executor."""
-        if not (filters or sort_by):
-            rows = self._local_search(query_text, min_score, limit, offset, fields)
-            if rows is not None:
-                return search_ops.local_frame(self.spark, rows)
+        Without filters or sort, a query the local executor accepts (no
+        wildcard/range/metadata clause, estimated postings and read bytes
+        within ``search._LOCAL_MAX_POSTINGS`` / ``_LOCAL_MAX_BYTES``; see
+        ``run_categories``) is answered in the driver: its final rows —
+        min_score-filtered, score desc then doc_id asc, cut at
+        offset+limit — come back as a driver-local DataFrame, no Spark job
+        once the query is compiled.  Every other search runs on the Spark
+        executor."""
         query_text = self._effective_query(query_text)
         config = self._search_config(fields)
+        pairs = [("__q", query_text)]
+        if not (filters or sort_by):
+            rows = search_ops.run_local(
+                self.reader, pairs, scored=True, top_k=offset + limit,
+                config=config,
+            )
+            if rows is not None:
+                return search_ops.local_frame(
+                    self.spark, rows[rows["score"] >= min_score]
+                )
         # filters compile to FILTER-context virtual clauses that prune
         # candidates INSIDE the evaluator (before scoring and before the
         # top-k cut) — a selective filter reduces work, not just output,
@@ -334,10 +341,10 @@ class TaxonomyEngine:
             # entirely — unscored eval (no tf-norm/dl/block-max work), join
             # docs, TakeOrderedAndProject.  Scores report as 0.0, exactly
             # the reference's filter-context scoring contract.
-            res = search_ops.run_categories(
+            res = search_ops.run_spark(
                 self.spark,
                 self.reader,
-                [("__q", query_text)],
+                pairs,
                 scored=False,
                 config=config,
                 extra_filters=extra,
@@ -349,10 +356,10 @@ class TaxonomyEngine:
             return res.orderBy(*order).limit(offset + limit).select(
                 "category_id", "doc_id", "score", *[c for c, _ in sort_by]
             )
-        res = search_ops.run_categories(
+        res = search_ops.run_spark(
             self.spark,
             self.reader,
-            [("__q", query_text)],
+            pairs,
             scored=True,
             top_k=None if sort_by else offset + limit,
             config=config,
@@ -372,27 +379,8 @@ class TaxonomyEngine:
             .limit(offset + limit)
         )
 
-    def _local_search(
-        self, query_text: str, min_score: float, limit: int, offset: int,
-        fields: list[str] | dict[str, float] | None = None,
-    ):
-        """The local executor's final search rows (pandas), or None when
-        the query must run on Spark."""
-        rows = search_ops.run_local(
-            self.reader,
-            [("__q", self._effective_query(query_text))],
-            scored=True,
-            top_k=offset + limit,
-            config=self._search_config(fields),
-        )
-        return None if rows is None else rows[rows["score"] >= min_score]
-
     def search_page(self, query_text: str, min_score: float = 0.0, limit: int = 10, offset: int = 0):
-        rows = self._local_search(query_text, min_score, limit, offset)
-        if rows is None:
-            rows = self.search(query_text, min_score, limit, offset).collect()
-        else:
-            rows = [Row(**r) for r in rows.to_dict("records")]
+        rows = self.search(query_text, min_score, limit, offset).collect()
         return rows[offset : offset + limit]
 
     def count(self, query_text: str) -> int:
@@ -400,7 +388,7 @@ class TaxonomyEngine:
         rows = search_ops.run_local(self.reader, pairs, scored=False)
         if rows is not None:
             return len(rows)
-        return search_ops.run_categories(
+        return search_ops.run_spark(
             self.spark, self.reader, pairs, scored=False
         ).count()
 

@@ -32,6 +32,7 @@ from __future__ import annotations
 import os
 import re
 import threading
+from collections import OrderedDict
 from dataclasses import dataclass
 from pathlib import Path
 from typing import NamedTuple
@@ -101,8 +102,6 @@ class IndexReader:
         #: InMemoryCategoriserRepository.cs:30,337-363).  LRU-bounded: a
         #: long-lived reader serving varied ad-hoc queries must not grow
         #: without bound.
-        from collections import OrderedDict
-
         self.compile_cache: OrderedDict = OrderedDict()
         self.compile_cache_max = 64
         #: (category_id, query_text) -> (node, df/bucket/tid map refs) —
@@ -137,10 +136,12 @@ class IndexReader:
         #: ``scored`` (a plan over the persisted docmap — nothing to release)
         self._dmap_proj: dict[bool, DataFrame] = {}
         #: local executor: pyarrow datasets over the postings and docmap
-        #: files (footers read once), built on first use — see
-        #: :meth:`_local_datasets` — and the per-band docmap sidecar rows
-        self._local_ds: tuple | None = None
-        self._local_sidecars: dict[int, pd.DataFrame] = {}
+        #: files plus their row-group byte index (footers read once), built
+        #: on first use — see :meth:`_local_datasets` — and the per-band
+        #: docmap sidecar rows (LRU, at most ``_LOCAL_SIDECAR_MAX_BYTES``)
+        self._local_ds: LocalDatasets | None = None
+        self._local_sidecars: OrderedDict = OrderedDict()
+        self._local_sidecar_bytes = 0
         self._local_lock = threading.Lock()  # concurrent callers fill them
 
     # -- tables -------------------------------------------------------------
@@ -241,23 +242,24 @@ class IndexReader:
         self._dmap_proj.clear()
         self._local_ds = None
         self._local_sidecars.clear()
+        self._local_sidecar_bytes = 0
 
     # -- local executor reads (pyarrow, in the driver) ------------------------
 
-    def _local_datasets(self) -> tuple:
-        """(main postings, delta postings or None, docmap) pyarrow datasets
-        over EXACTLY the files the Spark views read: the main generation
-        dirs plus the committed ``batch=<seq>`` delta dirs — never an
-        orphan batch dir, an ``.inprogress`` file or a ``_``/``.`` file.
-        Built on first use, so opening a reader costs nothing extra; every
-        footer is read here once and later scans prune row groups from the
-        cached metadata."""
+    def _local_datasets(self) -> LocalDatasets:
+        """Pyarrow datasets over EXACTLY the files the Spark views read:
+        the main generation dirs plus the committed ``batch=<seq>`` delta
+        dirs — never an orphan batch dir, an ``.inprogress`` file or a
+        ``_``/``.`` file.  Built on first use, so opening a reader costs
+        nothing extra; every footer is read here once, later scans prune
+        row groups from the cached metadata, and the routing rule sizes a
+        read from the row-group byte index (:meth:`local_read_bytes`)."""
         with self._local_lock:
             if self._local_ds is None:
                 self._local_ds = self._open_local_datasets()
             return self._local_ds
 
-    def _open_local_datasets(self) -> tuple:
+    def _open_local_datasets(self) -> LocalDatasets:
         import pyarrow as pa
         import pyarrow.dataset as ds
 
@@ -305,10 +307,65 @@ class IndexReader:
             ),
             format="parquet",
         )
-        for d in (main, delta, docmap):
+        # row-group byte index of the postings: (bucket — -1 for delta
+        # files, which every query reads — term_id min, term_id max,
+        # uncompressed bytes without posdata, posdata bytes)
+        rgs = []
+        for d in (main, delta):
             for frag in d.get_fragments() if d is not None else ():
                 frag.ensure_complete_metadata()
-        return main, delta, docmap
+                b = ds.get_partition_keys(frag.partition_expression).get(
+                    "bucket", -1
+                )
+                md = frag.metadata
+                tcol = md.schema.names.index("term_id")
+                for i in range(md.num_row_groups):
+                    rg = md.row_group(i)
+                    st = rg.column(tcol).statistics
+                    lo, hi = (
+                        (st.min, st.max)
+                        if st is not None and st.has_min_max
+                        else (np.iinfo(np.int64).min, np.iinfo(np.int64).max)
+                    )
+                    cols = [rg.column(j) for j in range(rg.num_columns)]
+                    pos = sum(
+                        c.total_uncompressed_size for c in cols
+                        if c.path_in_schema == "posdata"
+                    )
+                    rest = sum(c.total_uncompressed_size for c in cols) - pos
+                    rgs.append((b, lo, hi, rest, pos))
+        docmap_bytes = 0
+        for frag in docmap.get_fragments():
+            frag.ensure_complete_metadata()
+            md = frag.metadata
+            docmap_bytes += sum(
+                md.row_group(i).total_byte_size for i in range(md.num_row_groups)
+            )
+        rg = np.array(rgs, dtype=np.int64).reshape(-1, 5)
+        return LocalDatasets(main, delta, docmap, rg, docmap_bytes)
+
+    def local_read_bytes(
+        self, tids: list[int], buckets: list[int], with_pos: bool
+    ) -> int:
+        """Bytes a local read of the sorted ``tids`` (hosted in
+        ``buckets``) would decode, from the cached footers: the postings
+        row groups whose term_id range overlaps the query's in the hosting
+        buckets and in every delta file, plus the docmap sidecars of the
+        bands not in the sidecar cache (pro rata — a query's postings land
+        in most bands)."""
+        lds = self._local_datasets()
+        b, lo, hi, rest, pos = lds.row_groups.T
+        hit = (
+            (hi >= tids[0]) & (lo <= tids[-1])
+            & ((b < 0) | np.isin(b, buckets))
+        )
+        n_bands = 1 << self.band_bits
+        uncached = max(n_bands - len(self._local_sidecars), 0)
+        return (
+            int(rest[hit].sum())
+            + (int(pos[hit].sum()) if with_pos else 0)
+            + lds.docmap_bytes * uncached // n_bands
+        )
 
     def local_blocks(
         self, tids: list[int], buckets: list[int], columns: list[str]
@@ -320,33 +377,43 @@ class IndexReader:
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        main, delta, _ = self._local_datasets()
+        lds = self._local_datasets()
         tid = pc.field("term_id")
         sel = (tid >= tids[0]) & (tid <= tids[-1]) & tid.isin(tids)
         parts = [
-            main.to_table(
+            lds.main.to_table(
                 columns=columns, filter=sel & pc.field("bucket").isin(buckets)
             )
         ]
-        if delta is not None:
-            parts.append(delta.to_table(columns=columns, filter=sel))
+        if lds.delta is not None:
+            parts.append(lds.delta.to_table(columns=columns, filter=sel))
         return pa.concat_tables(parts).to_pandas()
 
     def local_sidecars(self, band: int) -> pd.DataFrame:
         """One band's docmap sidecar rows (ford, blk_seq, payload): the
-        ord -> doc_id array, per-field lengths and tombstones — cached per
-        band after the first read."""
+        ord -> doc_id array, per-field lengths and tombstones — kept in an
+        LRU of at most ``_LOCAL_SIDECAR_MAX_BYTES`` payload bytes (the
+        most recent band always stays)."""
         import pyarrow.compute as pc
 
-        docmap = self._local_datasets()[2]
+        docmap = self._local_datasets().docmap
         with self._local_lock:
             rows = self._local_sidecars.get(band)
-            if rows is None:
-                rows = docmap.to_table(
-                    columns=["ford", "blk_seq", "payload"],
-                    filter=pc.field("band") == band,
-                ).to_pandas()
-                self._local_sidecars[band] = rows
+            if rows is not None:
+                self._local_sidecars.move_to_end(band)
+                return rows
+            rows = docmap.to_table(
+                columns=["ford", "blk_seq", "payload"],
+                filter=pc.field("band") == band,
+            ).to_pandas()
+            self._local_sidecars[band] = rows
+            self._local_sidecar_bytes += _payload_bytes(rows)
+            while (
+                self._local_sidecar_bytes > _LOCAL_SIDECAR_MAX_BYTES
+                and len(self._local_sidecars) > 1
+            ):
+                _, old = self._local_sidecars.popitem(last=False)
+                self._local_sidecar_bytes -= _payload_bytes(old)
             return rows
 
     # -- dictionary expansion -------------------------------------------------
@@ -673,13 +740,43 @@ _TOPK_MIN_POSTINGS = 100_000
 #: routing bound of the LOCAL executor (run_local): a single-category run
 #: whose estimated postings (sum of global df over its terms) are at or
 #: below this is answered in the driver from pyarrow-read blocks.
-#: Measured on a 4-core host (warm, scored top-100): the local wall beat
-#: the Spark executor's up to ~2.3M postings for term disjunctions over a
-#: 60k-doc index, and for fixture categories over a 250k-doc index up to
-#: 2.2M postings (1.0 s vs 2.1 s) but not at 2.7M (3.3 s vs 2.6 s).  The
-#: bound sits well under that crossover: the local executor evaluates on
-#: one driver core that concurrent callers share.
+#: Measured on a 4-core host, 250k-doc index, warm, limit 10, fixture
+#: categories, queries/s local vs Spark at 1/4/8/16 in-flight callers:
+#: under 0.5M postings 3.8/4.3/4.2/3.9 vs 0.9/1.2/1.3/1.5; 0.5-1M
+#: 1.5/1.8/1.5/1.4 vs 0.8/1.1/1.1/1.0; 1-2.5M 0.9/0.6/0.6/0.8 vs
+#: 0.6/0.8/0.7/0.7.  A single caller is faster locally up to ~2.5-3M
+#: postings, but above 1M concurrent callers sharing the driver lose.
 _LOCAL_MAX_POSTINGS = 1_000_000
+
+#: the LOCAL executor's second routing bound: the bytes its read would
+#: decode (:meth:`IndexReader.local_read_bytes`, from cached footers).
+#: Postings files hash-partition terms within a bucket, so a read decodes
+#: whole row groups — this bound follows the I/O, which grows with the
+#: index, where the df bound follows the query.  Set just above the
+#: largest read measured (the whole 719 MiB of postings of the 250k-doc
+#: index above): local runs were faster there at every caller count;
+#: larger reads are unmeasured and go to Spark.
+_LOCAL_MAX_BYTES = 768 << 20
+
+#: cap on the docmap sidecar payload bytes a reader keeps for the local
+#: executor (LRU over bands)
+_LOCAL_SIDECAR_MAX_BYTES = 256 << 20
+
+
+class LocalDatasets(NamedTuple):
+    """The local executor's pyarrow view of one index snapshot."""
+
+    main: object  # pyarrow Dataset, postings partitioned by bucket
+    delta: object | None  # pyarrow Dataset over committed delta blocks
+    docmap: object  # pyarrow Dataset, main + delta docmap sidecars
+    #: int64 (n, 5): bucket (-1: delta), term_id min, term_id max,
+    #: uncompressed bytes without posdata, posdata bytes — per row group
+    row_groups: np.ndarray
+    docmap_bytes: int  # uncompressed
+
+
+def _payload_bytes(rows: pd.DataFrame) -> int:
+    return int(rows["payload"].map(len).sum())
 
 
 @dataclass(frozen=True)
@@ -2090,18 +2187,28 @@ def eval_band(
 # --------------------------------------------------------------------------
 
 
-def _local_eligible(node: qp.Node, df_map: dict) -> bool:
+def _local_eligible(
+    reader: IndexReader, node: qp.Node, df_map: dict, bucket_map: dict,
+    tid_map: dict,
+) -> bool:
     """The routing rule's per-node half: no distributed wildcard/range
-    expansion, no virtual (metadata, filter, match-all) clause, and
-    estimated postings — the sum of global df over its terms — at or below
-    ``_LOCAL_MAX_POSTINGS``."""
+    expansion, no virtual (metadata, filter, match-all) clause, estimated
+    postings — the sum of global df over its terms — at or below
+    ``_LOCAL_MAX_POSTINGS``, and a read of at most ``_LOCAL_MAX_BYTES``
+    (:meth:`IndexReader.local_read_bytes`)."""
     virtual: dict = {}
     _collect_virtual_nodes(node, virtual)
-    return (
-        not virtual
-        and not distributed_constructs(node)
-        and sum(df_map.get(k, 0) for k in needed_terms(node)) <= _LOCAL_MAX_POSTINGS
-    )
+    if virtual or distributed_constructs(node):
+        return False
+    keys = needed_terms(node)
+    if sum(df_map.get(k, 0) for k in keys) > _LOCAL_MAX_POSTINGS:
+        return False
+    keys = [k for k in keys if k in tid_map]
+    return not keys or reader.local_read_bytes(
+        sorted({tid_map[k] for k in keys}),
+        sorted({bucket_map[k] for k in keys}),
+        _node_has_phrase(node),
+    ) <= _LOCAL_MAX_BYTES
 
 
 def run_local(
@@ -2113,7 +2220,7 @@ def run_local(
 ) -> pd.DataFrame | None:
     """The LOCAL executor: a run of exactly one local-eligible category
     (see :func:`_local_eligible`) evaluated in the driver, or None when
-    the run must go to the Spark executor.
+    the run must go to the Spark executor (:func:`run_spark`).
 
     Same compile (:func:`compile_queries`), same kernel
     (:func:`eval_band`): the query's blocks are read with pyarrow filtered
@@ -2130,7 +2237,7 @@ def run_local(
         reader, categories, config
     )
     ((cid, node),) = compiled.items()
-    if not _local_eligible(node, df_map):
+    if not _local_eligible(reader, node, df_map, bucket_map, tid_map):
         return None
     keys = [k for k in needed_terms(node) if k in tid_map]
     frames = []
@@ -2196,16 +2303,42 @@ def run_categories(
     mirroring rank order (score desc, doc_id asc)).
 
     Two executors run the same compile and the same band kernel
-    (:func:`eval_band`).  A run of exactly ONE category without
-    extra filters whose compiled node has no distributed wildcard/range
-    expansion, no virtual (metadata, filter, match-all) clause and at most
-    ``_LOCAL_MAX_POSTINGS`` estimated postings (sum of global df over its
-    terms) goes to the LOCAL executor (:func:`run_local`): pyarrow reads
-    in the driver, no Spark job once compiled, rows returned as a
-    driver-local DataFrame.  Every other run — every multi-category batch
-    — goes to the SPARK executor: a postings scan pruned to the query
-    terms' buckets, a broadcast routing join, and one kernel task per
-    (chunk, band) group.
+    (:func:`eval_band`); this function routes each run once.  A run of
+    exactly ONE category without extra filters whose compiled node has no
+    distributed wildcard/range expansion, no virtual (metadata, filter,
+    match-all) clause, at most ``_LOCAL_MAX_POSTINGS`` estimated postings
+    (sum of global df over its terms) and a read of at most
+    ``_LOCAL_MAX_BYTES`` (row-group bytes from the cached footers) goes to
+    the LOCAL executor (:func:`run_local`): pyarrow reads in the driver,
+    no Spark job once compiled, rows returned as a driver-local
+    DataFrame.  Every other run — every multi-category batch — goes to
+    the SPARK executor (:func:`run_spark`).
+
+    ``extra_filters``: metadata clauses applied in FILTER context to every
+    query (see :func:`run_spark`)."""
+    config = config or reader.config
+    if not extra_filters:
+        local = run_local(reader, categories, scored, top_k, config)
+        if local is not None:
+            return local_frame(spark, local)
+    return run_spark(
+        spark, reader, categories, scored, top_k, config, extra_filters
+    )
+
+
+def run_spark(
+    spark: SparkSession,
+    reader: IndexReader,
+    categories: list[tuple[str, str]],
+    scored: bool = True,
+    top_k: int | None = None,
+    config: EngineConfig | None = None,
+    extra_filters: tuple[qp.Node, ...] | None = None,
+) -> DataFrame:
+    """The SPARK executor for any run (same contract as
+    :func:`run_categories`, no routing): a postings scan pruned to the
+    query terms' buckets, a broadcast routing join, and one
+    :func:`eval_band` task per (chunk, band) group.
 
     ``extra_filters``: metadata clauses applied in FILTER context to every
     query — compiled as virtual posting sets that intersect candidates
@@ -2213,10 +2346,6 @@ def run_categories(
     per-band top-k cut (the reference's Must/Filter split,
     OpenSearchConnection.cs:393-402), never as a post-join."""
     config = config or reader.config
-    if not extra_filters:
-        local = run_local(reader, categories, scored, top_k, config)
-        if local is not None:
-            return local_frame(spark, local)
     compiled, virtual, df_map, bucket_map, tid_map = compile_queries(
         reader, categories, config
     )

@@ -50,14 +50,16 @@ def assert_executors_agree(spark, reader, pairs):
         ).collect():
             want.setdefault(r["category_id"], []).append((r["doc_id"], r["score"]))
         for cid, q in pairs:
-            compiled, _, df_map, _, _ = so.compile_queries(
+            compiled, _, df_map, bucket_map, tid_map = so.compile_queries(
                 reader, [(cid, q)], reader.config
             )
             node = compiled[cid]
             virtual: dict = {}
             so._collect_virtual_nodes(node, virtual)
             simple = not virtual and not so.distributed_constructs(node)
-            assert so._local_eligible(node, df_map) == simple, cid
+            assert so._local_eligible(
+                reader, node, df_map, bucket_map, tid_map
+            ) == simple, cid
             group = f"executors-{scored}-{cid}"
             sc.setJobGroup(group, group)
             try:

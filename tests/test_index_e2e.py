@@ -230,6 +230,69 @@ def test_local_searches_keep_persisted_rdds_bounded(built, spark):
     assert not eng.reader._local_sidecars and eng.reader._local_ds is None
 
 
+@pytest.mark.parametrize("bound", ["_LOCAL_MAX_POSTINGS", "_LOCAL_MAX_BYTES"])
+def test_runs_over_a_local_bound_go_to_spark(built, spark, monkeypatch, bound):
+    """With a routing bound lowered to the median distinct estimate of the
+    locally answered fixture categories, the categories above it run on
+    Spark and the rest in the driver, each returning exactly its unbounded
+    local rows.  The sidecar cache is cut to one band: it evicts, stays
+    exact and keeps its byte count."""
+    from ds_discovery_opensearch_taxonomy_spark.operators import search as so
+
+    cat, _, _, _ = built
+    reader = IndexReader(spark, str(cat.root), TEST_CONFIG)
+    sc = spark.sparkContext
+    monkeypatch.setattr(so, "_LOCAL_SIDECAR_MAX_BYTES", 1)
+
+    def estimate(cid, q):
+        compiled, _, df_map, bucket_map, tid_map = so.compile_queries(
+            reader, [(cid, q)], reader.config
+        )
+        node = compiled[cid]
+        if bound == "_LOCAL_MAX_POSTINGS":
+            return sum(df_map.get(k, 0) for k in so.needed_terms(node))
+        keys = [k for k in so.needed_terms(node) if k in tid_map]
+        return reader.local_read_bytes(
+            sorted({tid_map[k] for k in keys}),
+            sorted({bucket_map[k] for k in keys}),
+            so._node_has_phrase(node),
+        )
+
+    want = {}
+    for c in load_categories()[:40]:
+        rows = so.run_local(reader, [(c["category_id"], c["query_text"])], top_k=100)
+        if rows is not None and len(rows):
+            want[c["category_id"], c["query_text"]] = sorted(
+                zip(rows["doc_id"], rows["score"])
+            )
+    assert len(reader._local_sidecars) == 1
+    assert reader._local_sidecar_bytes == so._payload_bytes(
+        next(iter(reader._local_sidecars.values()))
+    )
+    est = {pair: estimate(*pair) for pair in want}
+    vals = sorted(set(est.values()))  # reads of one small index tie
+    assert len(vals) > 1, vals
+    limit = vals[(len(vals) - 1) // 2]
+    monkeypatch.setattr(so, bound, limit)
+    n_spark = 0
+    for (cid, q), rows in want.items():
+        group = f"bound-{bound}-{cid}"
+        sc.setJobGroup(group, group)
+        try:
+            got = so.run_categories(spark, reader, [(cid, q)], top_k=100).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert sorted((r["doc_id"], r["score"]) for r in got) == rows, cid
+        if est[cid, q] > limit:
+            assert n_jobs > 0, f"{cid}: over the bound, expected Spark"
+            n_spark += 1
+        else:
+            assert n_jobs == 0, f"{cid}: within the bound, launched {n_jobs}"
+    assert 0 < n_spark < len(want), n_spark
+    reader.unpersist()
+
+
 def test_air_force_reference_doc(built, spark):
     """Reference assertion: row 0 (AIR 37/177 verbatim) is categorised
     'Air Force' (ElasticCategoriserRepositoryTest.cs)."""

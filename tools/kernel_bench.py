@@ -7,7 +7,10 @@ This tool replays ONE (chunk, band) eval group's exact shuffled input
 kernel both executors run (operators/search.eval_band), single-threaded,
 and reports per-category medians over N repeats plus an optional
 cProfile breakdown — pure kernel CPU, no Spark scheduling or
-memory-bandwidth contention from sibling tasks.
+memory-bandwidth contention from sibling tasks.  Each pass times the
+kernel's set-up (``median_setup_s``: sidecar unpack, groupby by term,
+evaluator construction) and its per-category evaluation
+(``median_eval_s``) separately; ``median_total_s`` is their sum.
 
 Usage:
   1. dump:    SPARK_GRAFT_EVAL_DUMP=/tmp/evaldump python tools/eval_decompose.py 32
@@ -98,6 +101,12 @@ def main() -> None:
         walls, matches = one_pass()
         runs.append((time.perf_counter() - t0, walls))
     med_total = statistics.median(r[0] for r in runs)
+    # eval = the per-category walls (eval + ord -> doc_id + top-k cut);
+    # setup = the rest of the pass (sidecar unpack, groupby by term,
+    # evaluator construction).  Only median_eval_s compares with readings
+    # taken before the kernel was shared, whose total excluded set-up.
+    med_eval = statistics.median(sum(r[1].values()) for r in runs)
+    med_setup = statistics.median(r[0] - sum(r[1].values()) for r in runs)
     per_cid = {
         cid: statistics.median(r[1][cid] for r in runs) for cid in nodes
     }
@@ -109,6 +118,8 @@ def main() -> None:
                 "scored": scored,
                 "repeat": repeat,
                 "median_total_s": round(med_total, 4),
+                "median_setup_s": round(med_setup, 4),
+                "median_eval_s": round(med_eval, 4),
                 "matches": matches,
                 "top_cids": [(c, round(w, 4)) for c, w in top],
             }
